@@ -89,10 +89,13 @@ final class CandleStore(spark: SparkSession, val path: String) {
     * already ran [[recover]] in the same operation.
     *
     * The table schema is PINNED (data columns as written + the four
-    * partition columns in directory order — byte-identical to what
-    * inference returned on every store this engine writes): a bare
-    * `read.parquet` launches a footer-inference job per scan (guide
-    * §7.3), multiplied across every store-backed query and fixture.
+    * partition columns in directory order, their types set by the pin
+    * — so an all-digit code such as `005930` stays a string, leading
+    * zero included, where inference would read it as an integer): a
+    * bare `read.parquet` launches a footer-inference job per scan
+    * (guide §7.3), multiplied across every store-backed query and
+    * fixture. [[CandleStore.assertPinnedSchema]] checks the data
+    * fields and partition names on the first scan of each store.
     * A store with no data dirs falls back to the bare read so the
     * "unable to infer schema" failure of scanning a never-committed
     * store stays exactly as loud as before.
@@ -878,10 +881,13 @@ object CandleStore {
   def apply(spark: SparkSession, path: String): CandleStore =
     new CandleStore(spark, path)
 
-  /** The scan schema inference always returned for this layout: data
-    * columns as written (ts..bit_fields), then the partition columns in
-    * [[graft.model.Candle.partitionCols]] directory order. Pinned so
-    * [[CandleStore.scanNoRecover]] skips per-scan footer inference.
+  /** The scan schema of this layout: data columns as written
+    * (ts..bit_fields), then the partition columns in
+    * [[graft.model.Candle.partitionCols]] directory order. The pin SETS
+    * the partition types (`code` and `market` are strings whatever
+    * their values look like), so it differs from inference on a store
+    * whose codes are all digits. Pinned so [[CandleStore.scanNoRecover]]
+    * skips per-scan footer inference.
     */
   private[store] val pinnedScanSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -901,7 +907,11 @@ object CandleStore {
   /** One-time (per store path per JVM) footer-vs-pin assertion: a
     * future layout revision that adds a column would otherwise be
     * silently PROJECTED AWAY by the pinned read instead of failing
-    * loudly. Costs one inference on the FIRST scan of each store;
+    * loudly. Compares the data fields by name and type and the
+    * partition column names in directory order; partition TYPES are
+    * not compared, because the pin sets them (inference types
+    * `code=005930` as an integer, the pinned read keeps it a string).
+    * Costs one inference on the FIRST scan of each store;
     * every later scan stays inference-free (the point of the pin).
     * Transient inference failures (a store mid-commit) un-mark the
     * path so the next scan re-checks instead of never checking.
@@ -909,12 +919,19 @@ object CandleStore {
   private val pinCheckedPaths =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Column names in order, with the type of each data column; a
+    * partition column's type is left out (None). */
+  private def pinShape(s: org.apache.spark.sql.types.StructType)
+      : Seq[(String, Option[org.apache.spark.sql.types.DataType])] =
+    s.fields.toSeq.map(f =>
+      f.name -> Option.unless(graft.model.Candle.partitionCols.contains(f.name))(f.dataType))
+
   private[store] def assertPinnedSchema(spark: SparkSession, path: String): Unit = {
     if (!pinCheckedPaths.add(path)) return
     val inferred =
       try spark.read.parquet(path).schema
       catch { case _: Throwable => pinCheckedPaths.remove(path); return }
-    if (inferred != pinnedScanSchema) {
+    if (pinShape(inferred) != pinShape(pinnedScanSchema)) {
       pinCheckedPaths.remove(path)
       sys.error(
         s"candle store $path: on-disk schema does not match the pinned " +

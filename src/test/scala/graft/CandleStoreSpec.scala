@@ -329,4 +329,72 @@ class CandleStoreSpec extends SparkSpec {
     good.upsert(Seq(c("BTC", "2022-03-01 10:00:00", 1)).toDF())
     assert(good.scan().count() == 1)
   }
+
+  // a store-shaped dir holding one candle, with `open` as given and
+  // `nesting` as the partition directory order
+  private def doctoredStore(name: String, open: org.apache.spark.sql.Column,
+                            nesting: Seq[String]): CandleStore = {
+    val dir = tmpDir(name) + "/t"
+    Seq("2022-03-01 10:00:00").toDF("tss")
+      .select(to_timestamp($"tss").as("ts"), open.as("open"),
+        lit(2.0).as("high"), lit(0.5).as("low"), lit(1.5).as("close"),
+        lit(10.0).as("volume"), lit(0L).as("bit_fields"),
+        lit("UPBIT").as("market"), lit(60).as("candle_length"),
+        lit("BTC").as("code"), lit(2022).as("year"))
+      .write.partitionBy(nesting: _*).parquet(dir)
+    CandleStore(spark, dir)
+  }
+
+  test("pinned-scan guard: a changed data-column type fails loudly") {
+    val doctored = doctoredStore("cs-pintype", lit("1.0"), Candle.partitionCols)
+    val e = intercept[RuntimeException](doctored.scan().count())
+    assert(e.getMessage.contains("pinned"), s"unexpected: ${e.getMessage}")
+  }
+
+  test("pinned-scan guard: a changed partition nesting fails loudly") {
+    val doctored = doctoredStore("cs-pinnest", lit(1.0),
+      Seq("market", "code", "candle_length", "year"))
+    val e = intercept[RuntimeException](doctored.scan().count())
+    assert(e.getMessage.contains("pinned"), s"unexpected: ${e.getMessage}")
+  }
+
+  test("all-digit KRX codes keep their leading zeros through every read path " +
+      "(ref page/index.go:19-28 keys codes as strings)") {
+    val base = tmpDir("cs-krx")
+    val store = CandleStore(spark, s"$base/markets/krx")
+    def k(code: String, t: String, o: Double): Candle =
+      Candle("KRX", code, 60, ts(t), o, o + 1, o - 1, o + 0.5, 10.0, 0L)
+    // one series across the 2023/2024 boundary, a second code beside it
+    store.upsert(Seq(
+      k("005930", "2023-12-31 23:59:00", 1),
+      k("005930", "2024-01-01 00:01:00", 2),
+      k("000660", "2024-01-01 00:01:00", 3)).toDF())
+    store.upsert(Seq(k("005930", "2024-01-01 00:01:00", 20)).toDF()) // newer wins
+    store.appendNewer(Seq(k("005930", "2024-01-01 00:02:00", 4)).toDF())
+
+    assert(store.scan().schema("code").dataType == org.apache.spark.sql.types.StringType)
+    val codes = store.scan().select("code").distinct().as[String].collect().sorted
+    assert(codes.toSeq == Seq("000660", "005930"))
+
+    def opens(df: org.apache.spark.sql.DataFrame): Seq[Double] =
+      df.orderBy("ts").select("open").as[Double].collect().toSeq
+    assert(opens(store.readPage("KRX", "005930", 60, 2024)) == Seq(20.0, 4.0))
+    assert(opens(store.readPage("KRX", "005930", 60, 2023)) == Seq(1.0))
+    assert(opens(store.readPage("KRX", "000660", 60, 2024)) == Seq(3.0))
+    assert(opens(store.rangeScan("KRX", "005930", 60,
+      ts("2023-12-31 00:00:00"), ts("2024-01-02 00:00:00"))) == Seq(1.0, 20.0, 4.0))
+    val mm = store.minMaxTs("KRX", "005930", 60, 2024).as[(Timestamp, Timestamp)].head()
+    assert(mm == (ts("2024-01-01 00:01:00"), ts("2024-01-01 00:02:00")))
+
+    val before = store.scan().orderBy("code", "ts").collect().toSeq
+    assert(store.compact(maxFilesPerPartition = 1) == 1)
+    assert(store.scan().orderBy("code", "ts").collect().toSeq == before)
+
+    spark.conf.set("spark.sql.catalog.cs_krx", classOf[graft.sources.CandleCatalog].getName)
+    spark.conf.set("spark.sql.catalog.cs_krx.base", base)
+    val sql = spark.sql(
+      "SELECT code, open FROM cs_krx.markets.krx WHERE code = '005930' ORDER BY ts")
+      .as[(String, Double)].collect().toSeq
+    assert(sql == Seq(("005930", 1.0), ("005930", 20.0), ("005930", 4.0)))
+  }
 }
