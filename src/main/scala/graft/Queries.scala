@@ -910,29 +910,6 @@ object Queries {
     srcDir
   }
 
-  /** Shared recall-gate fold of the five streamed-vector property
-    * queries (q9M/q9Z/q9X/qA4/qA6): per-query hits of `approxPairs`
-    * inside the brute-force top-k `exactPairs`, aggregated to ONE row —
-    * (n_queries, <extras>, recall_ok = mean recall@k ≥ floor). Both
-    * sides are localCheckpoint()ed: each feeds two jobs (the semi-join
-    * and the query census) and re-running a stateful probe per job
-    * would double the measured operator.
-    */
-  /** Start `body` on a background thread NOW; the returned thunk joins
-    * and yields its result (rethrowing the original failure). Used to
-    * overlap a property query's independent driver actions (guide
-    * §2.6 — the scheduler happily runs concurrent jobs; they were only
-    * serial because the driver called them serially).
-    */
-  private def background[T](body: => T): () => T = Par.detach(body)
-
-  /** Streamed-state reads under the substream's infer-once pinned
-    * schema ([[graft.streaming.Ingest.pinnedRead]]) — a bare
-    * `read.parquet` pays a footer-inference job per call (guide §7.3).
-    */
-  private def pinnedState(s: SparkSession, paths: String*): DataFrame =
-    graft.streaming.Ingest.pinnedRead(s, paths)
-
   /** Multiset identity check as ONE aggregation (guide §2.3/§2.4 —
     * aggregate before you shuffle, fewer shuffles): tag each side ±1,
     * group by every column, count groups whose signed sum is non-zero —
@@ -951,9 +928,17 @@ object Queries {
       .where(col("_d") =!= 0L).count()
   }
 
-  /** `extras` is BY-NAME and evaluated only after both sides'
+  /** Shared recall-gate fold of the five streamed-vector property
+    * queries (q9M/q9Z/q9X/qA4/qA6): per-query hits of `approxPairs`
+    * inside the brute-force top-k `exactPairs`, aggregated to ONE row —
+    * (n_queries, <extras>, recall_ok = mean recall@k ≥ floor). Both
+    * sides are localCheckpoint()ed: each feeds two jobs (the semi-join
+    * and the query census) and re-running a stateful probe per job
+    * would double the measured operator.
+    *
+    * `extras` is BY-NAME and evaluated only after both sides'
     * checkpoints land: property queries start their identity-diff
-    * count on a background thread ([[background]]) and pass extras
+    * count on a background thread ([[Par.detach]]) and pass extras
     * that await it — so the diff job overlaps the two materializations
     * here instead of running before them (guide §2.6).
     */
@@ -2356,7 +2341,7 @@ object Queries {
     // must be row-identical to it at every boundary.
     "q9B_stream_decontaminate" -> ((s, d) => {
       val state = streamedDeconState(s, d)
-      pinnedState(s, s"$state/quarantine/batch_*")
+      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/quarantine/batch_*"))
         .select(col("doc_id"), col("n_contaminated"))
     }),
     // Stateful in-flight near-dup marking (round 8): first-wins
@@ -2368,7 +2353,7 @@ object Queries {
     // every verified (id_a < id_b) pair, aggregated.
     "q9C_stream_neardup" -> ((s, d) => {
       val state = streamedNearDupState(s, d)
-      pinnedState(s, s"$state/flags/batch_*")
+      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/flags/batch_*"))
         .select(col("doc_id"), col("n_pairs"), col("max_jaccard"))
     }),
     // Offline reconciliation of the streamed first-wins near-dup state
@@ -2393,7 +2378,7 @@ object Queries {
     // sequential fold in SQL with the q8I JSD formula.
     "q9E_stream_drift" -> ((s, d) => {
       val state = streamedDriftState(s, d)
-      pinnedState(s, s"$state/drift/batch_*")
+      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/drift/batch_*"))
         .select(col("batch_id"), col("n_docs"), col("n_grams"),
           col("js_div"), col("alarm"))
     }),
@@ -2407,7 +2392,7 @@ object Queries {
     // one-shot build's, so parity is a band, not equality).
     "q9P_stream_hll_distinct" -> ((s, d) => {
       val state = streamedHllState(s, d)
-      val streamed = pinnedState(s, s"$state/counts/batch_2")
+      val streamed = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/counts/batch_2"))
         .select(col("key"), col("distinct_tokens").as("stream_est"))
       val docs = T.documents(s, d)
       val toks = docs.select(col("source").as("key"),
@@ -2431,7 +2416,7 @@ object Queries {
     // oracle replays the (batch, id)-ordered drop-later fold in SQL.
     "q9O_stream_exact_dedup" -> ((s, d) => {
       val state = streamedExactDedupState(s, d)
-      pinnedState(s, s"$state/dups/batch_*").select(col("doc_id"))
+      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/dups/batch_*")).select(col("doc_id"))
     }),
     // Token-balanced output sharding (round 8): the corpus cut into
     // ~2000-token shards along the distributed hash-order prefix sum
@@ -2499,7 +2484,7 @@ object Queries {
       val state = streamedIvfIndexState(s, d)
       val emb = T.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 10000)
-      val cents = pinnedState(s, s"$state/centroids/batch_*")
+      val cents = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/centroids/batch_*"))
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
       val streamed = graft.streaming.Ingest.ivfCellState(s, state)
@@ -2509,7 +2494,7 @@ object Queries {
         col("vec_id").cast("long").as("id"))
       // identity diff runs on a background thread, overlapping the
       // recall gate's two materializations (extras is by-name)
-      val diff = background(multisetDiffCount(streamed, batchAssigned))
+      val diff = Par.detach(multisetDiffCount(streamed, batchAssigned))
       // q63's floor: measured mean recall@10 0.54-0.62 with full-corpus
       // training; first-batch training lands in the same band (the
       // quantizer sees a 1/3 uniform sample)
@@ -2533,10 +2518,10 @@ object Queries {
       val state = streamedIvfPqIndexState(s, d)
       val emb = T.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 10000)
-      val cents = pinnedState(s, s"$state/centroids/batch_*")
+      val cents = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/centroids/batch_*"))
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val bookRows = pinnedState(s, s"$state/books/batch_*")
+      val bookRows = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/books/batch_*"))
         .select(col("s"), col("c"), col("vals"))
         .as[(Int, Int, Array[Double])].collect()
       val m = bookRows.map(_._1).max + 1
@@ -2549,8 +2534,8 @@ object Queries {
         cents, books, m, ks)
       // identity diff + code-length census run on background threads,
       // overlapping the recall gate's materializations (extras by-name)
-      val diff = background(multisetDiffCount(streamed, batchCodes))
-      val codeLensF = background(streamed
+      val diff = Par.detach(multisetDiffCount(streamed, batchCodes))
+      val codeLensF = Par.detach(streamed
         .agg(max(length(col("code"))), min(length(col("code")))).head())
       def slim = {
         val codeLens = codeLensF()
@@ -2593,24 +2578,24 @@ object Queries {
         names(centDirs) == Seq("compact_upto_2") &&
         names(bookDirs) == Seq("compact_upto_2") &&
         !fs.exists(new org.apache.hadoop.fs.Path(s"$state/centroids/batch_0"))
-      val cents = pinnedState(s, centDirs: _*)
+      val cents = graft.streaming.Ingest.pinnedRead(s, centDirs)
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val bookRows = pinnedState(s, bookDirs: _*)
+      val bookRows = graft.streaming.Ingest.pinnedRead(s, bookDirs)
         .select(col("s"), col("c"), col("vals"))
         .as[(Int, Int, Array[Double])].collect()
       val m = bookRows.map(_._1).max + 1
       val ks = bookRows.map(_._2).max + 1
       val books = Array.ofDim[Array[Double]](m, ks)
       bookRows.foreach { case (sb, c, v) => books(sb)(c) = v }
-      val nReshardedF = background(emb.where(col("vec_id") % 3 < 2).count())
+      val nReshardedF = Par.detach(emb.where(col("vec_id") % 3 < 2).count())
       val streamed = graft.streaming.Ingest.ivfPqCodeState(s, state)
         .select(col("cell_id"), col("id"), col("code")).localCheckpoint()
       val batchCodes = Similarity.encodeIvfPq(emb, "vec_id", "embedding",
         cents, books, m, ks)
       // identity diff + √N census on background threads, overlapping
       // the recall gate's materializations (extras is by-name)
-      val diff = background(multisetDiffCount(streamed, batchCodes))
+      val diff = Par.detach(multisetDiffCount(streamed, batchCodes))
       // nProbe = 0: the serving-side √-family derivation (2·√nCells)
       recallGateRow(
         Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 10),
@@ -2646,10 +2631,10 @@ object Queries {
         centDirs.map(p => new org.apache.hadoop.fs.Path(p).getName) ==
           Seq("compact_upto_2") &&
         !fs.exists(new org.apache.hadoop.fs.Path(s"$state/centroids/batch_0"))
-      val cents = pinnedState(s, centDirs: _*)
+      val cents = graft.streaming.Ingest.pinnedRead(s, centDirs)
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val nReshardedF = background(emb.where(col("vec_id") % 3 < 2).count())
+      val nReshardedF = Par.detach(emb.where(col("vec_id") % 3 < 2).count())
       val streamed = graft.streaming.Ingest.ivfCellState(s, state)
         .select(col("cell_id"), col("id")).localCheckpoint()
       val batchAssigned = emb.select(
@@ -2657,7 +2642,7 @@ object Queries {
         col("vec_id").cast("long").as("id"))
       // identity diff + √N census on background threads, overlapping
       // the recall gate's materializations (extras is by-name)
-      val diff = background(multisetDiffCount(streamed, batchAssigned))
+      val diff = Par.detach(multisetDiffCount(streamed, batchAssigned))
       // nProbe = 0: the serving-side √-family derivation (2·√nCells)
       recallGateRow(
         Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 10),
@@ -2680,13 +2665,13 @@ object Queries {
       import s.implicits._
       val state = streamedEmbedDedupState(s, d)
       // four independent driver actions — overlap them (guide §2.6)
-      val censusF = background(
+      val censusF = Par.detach(
         graft.streaming.Ingest.ivfCellState(s, state).count())
-      val nEmbF = background(T.embeddings(s, d).count())
-      val plantedF = background(
+      val nEmbF = Par.detach(T.embeddings(s, d).count())
+      val plantedF = Par.detach(
         T.embeddings(s, d).where(col("vec_id") % 10 === 0)
           .select(col("vec_id")).as[Long].collect())
-      val flags = pinnedState(s, s"$state/flags/batch_*")
+      val flags = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/flags/batch_*"))
         .select(col("id"), col("max_cos")).as[(Long, Double)].collect().toMap
       val planted = plantedF()
       val off = q9yTwinOffset(s, d)
@@ -2790,7 +2775,7 @@ object Queries {
     // (cum over (batch, hash, id) per source).
     "q9H_stream_quota" -> ((s, d) => {
       val state = streamedQuotaState(s, d)
-      pinnedState(s, s"$state/docs/batch_*")
+      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/docs/batch_*"))
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("cum_tokens").cast("bigint").as("cum_tokens"))
     }),
@@ -3035,7 +3020,7 @@ object Queries {
 
   /** Streamed PQ index with a MID-STREAM √N RE-SHARD: the
     * [[streamedIvfPqIndexState]] slicing with `reshardEvery = 2`, so
-    * before batch 2 the writer re-trains the coarse quantizer at
+    * before batch 2 the ingest re-trains the coarse quantizer at
     * `nCells ≈ √N` over the accumulated membership, re-encodes it from
     * the source table, and publishes the three-part generation batch 2
     * then encodes under ([[graft.streaming.Ingest.reshardIvfPqIndex]])
@@ -3076,7 +3061,7 @@ object Queries {
 
   /** Streamed RAW-vector IVF index with a MID-STREAM √N RE-SHARD: the
     * [[streamedIvfIndexState]] slicing with `reshardEvery = 2`, so
-    * before batch 2 the writer re-trains the coarse quantizer at
+    * before batch 2 the ingest re-trains the coarse quantizer at
     * `nCells ≈ √N` over the accumulated membership and re-assigns it
     * ([[graft.streaming.Ingest.reshardIvfIndex]] — no source table
     * needed: the raw state holds the vectors) — the qA4 scale remedy
@@ -3138,7 +3123,7 @@ object Queries {
 
   /** Drift-refresh fixture: 2 batches of family A, then 3 batches of
     * the orthogonal family B ("the encoder changed"). Batches are
-    * driven through the writer's per-batch body directly (the
+    * driven through the ingest's per-batch body directly (the
     * StreamingSpec pattern) in a PINNED order — a file stream's batch
     * composition under AvailableNow is scheduler-dependent, and this
     * fixture's gates are order-sensitive by design (the trigger

@@ -612,7 +612,7 @@ object Dedup {
   /** Cross-corpus near-dup join: every `incoming` document paired with
     * its verified near-dups in `history` — the "is today's crawl
     * already in the corpus?" batch operator (the streaming sibling is
-    * [[graft.streaming.Ingest.nearDupIngestWriter]]; within-corpus
+    * [[graft.streaming.Ingest.startNearDupIngest]]; within-corpus
     * pairs are [[minhashNearDupPairs]]'s job, not this one's).
     *
     * Scale shape: the HISTORY side contributes exactly one slim

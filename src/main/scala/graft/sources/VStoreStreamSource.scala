@@ -20,7 +20,7 @@ import graft.store.VersionedCandleStore
   * micro-batch `(a, b]` is exactly [[VersionedCandleStore.changesSince]]
   * of that window: deterministic on replay (checkpoint recovery re-reads
   * the same journal window), unfolded rows with `tx_id` stamps. Together
-  * with `Ingest.versionedCommitWriter` this closes the loop: streams
+  * with `Ingest.startVersionedIngest` this closes the loop: streams
   * write the store one journaled tx per micro-batch, and downstream
   * pipelines tail those same txs as a stream.
   *

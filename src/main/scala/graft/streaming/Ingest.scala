@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.store.CandleStore
 
@@ -27,20 +26,30 @@ import graft.store.CandleStore
   */
 object Ingest {
 
-  /** Run independent Spark actions (state writes of one micro-batch)
-    * CONCURRENTLY from driver threads (guide §2.6 "overlap independent
-    * jobs"): the per-batch state dumps write different directories from
-    * already-materialized (localCheckpoint'ed) inputs, so their jobs
-    * are independent — running them serially left the cluster idle for
-    * every job's scheduling/commit latency in turn. Exceptions
-    * propagate (first failure rethrown after all settle — a batch must
-    * not half-publish silently on one sink's failure while another's
-    * exception unwinds past the writes).
+  /** The one query shape every ingest here starts: `body` runs once per
+    * micro-batch under `foreachBatch` (one "transaction" per batch, the
+    * reference's `Database.Execute`, `database/database.go:27-51`),
+    * offsets checkpoint under `checkpointDir`, and the engine owns the
+    * `trigger`.
     */
-  private def inParallelActions(actions: (() => Unit)*): Unit = {
-    graft.Par.settleAll(actions.map(a => () => a()))
-    ()
-  }
+  private def startForeachBatch(stream: DataFrame, checkpointDir: String,
+                                trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .trigger(trigger)
+      .start()
+
+  /** The maintenance cadence of the multi-batch ingests: true at every
+    * `every`-th batch boundary after the first, where a compaction,
+    * re-train or re-shard over the strictly-earlier batches `[0,
+    * batchId)` runs BEFORE the batch (so a retry of this very batch
+    * never sees its own state). `every <= 0` never fires.
+    */
+  private def onCadence(every: Int, batchId: Long): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
 
   /** Footer-inference-once reads of substream state (guide §6, §7.3):
     * every generation dir of one substream (`.../<kind>/batch_*`,
@@ -108,51 +117,41 @@ object Ingest {
     * one "transaction" (reference: `Database.Execute`,
     * `database/database.go:27-51`); idempotent upsert + checkpointed
     * offsets give exactly-once end-to-end.
-    */
-  /** @param transform applied to each micro-batch before the upsert —
+    *
+    * @param transform applied to each micro-batch before the upsert —
     *   e.g. tick→candle aggregation; runs inside the batch job, so the
     *   checkpoint still guards the whole pipeline.
     * @param lateHorizonSec when set, rows more than this many seconds
     *   behind their batch's max `ts` are counted into
     *   [[lateRowCounter]] (they are still ingested — metrics only).
     */
-  def upsertWriter(stream: DataFrame, store: CandleStore,
-                   checkpointDir: String,
-                   transform: DataFrame => DataFrame = identity,
-                   lateHorizonSec: Option[Long] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lateHorizonSec match {
-          case None =>
-            if (!batch.isEmpty) { store.upsert(transform(batch)); () }
-          case Some(horizon) =>
-            // foreachBatch frames re-execute their source plan per
-            // action; persist while the metric + upsert both read it,
-            // and fold the emptiness check into the max-ts aggregation
-            // (null max == empty batch) instead of a separate isEmpty.
-            batch.persist()
-            try {
-              val mxRow = batch.agg(max(unix_timestamp(col("ts")))).head()
-              if (!mxRow.isNullAt(0)) {
-                val n = batch
-                  .where(unix_timestamp(col("ts")) < mxRow.getLong(0) - horizon)
-                  .count()
-                lateRowCounter(batch.sparkSession).add(n)
-                store.upsert(transform(batch)); ()
-              }
-            } finally { batch.unpersist(); () }
-        }
-      }
-
   def startUpsertIngest(stream: DataFrame, store: CandleStore,
                         checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
                         transform: DataFrame => DataFrame = identity,
                         lateHorizonSec: Option[Long] = None): StreamingQuery =
-    upsertWriter(stream, store, checkpointDir, transform, lateHorizonSec)
-      .trigger(trigger).start()
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, _) =>
+      lateHorizonSec match {
+        case None =>
+          if (!batch.isEmpty) { store.upsert(transform(batch)); () }
+        case Some(horizon) =>
+          // foreachBatch frames re-execute their source plan per
+          // action; persist while the metric + upsert both read it,
+          // and fold the emptiness check into the max-ts aggregation
+          // (null max == empty batch) instead of a separate isEmpty.
+          batch.persist()
+          try {
+            val mxRow = batch.agg(max(unix_timestamp(col("ts")))).head()
+            if (!mxRow.isNullAt(0)) {
+              val n = batch
+                .where(unix_timestamp(col("ts")) < mxRow.getLong(0) - horizon)
+                .count()
+              lateRowCounter(batch.sparkSession).add(n)
+              store.upsert(transform(batch)); ()
+            }
+          } finally { batch.unpersist(); () }
+      }
+    }
 
   /** Micro-batch ingest into SEVERAL stores as ONE atomic cross-store
     * transaction per micro-batch — the streaming shape of the
@@ -169,14 +168,14 @@ object Ingest {
     * `ops` builds the per-batch op list from the transformed batch —
     * e.g. a raw-tick append to a versioned store AND the candle
     * aggregate upsert to a plain store, atomically visible together.
+    * The query checkpoints under `coordDir/_ckpt_<namePrefix>`.
     */
-  def crossStoreCommitWriter(stream: DataFrame, coordDir: String,
-                             namePrefix: String,
-                             ops: DataFrame => Seq[graft.store.CrossStoreTx.Op]): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$coordDir/_ckpt_$namePrefix")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  def startCrossStoreIngest(stream: DataFrame, coordDir: String,
+                            namePrefix: String,
+                            ops: DataFrame => Seq[graft.store.CrossStoreTx.Op],
+                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startForeachBatch(stream, s"$coordDir/_ckpt_$namePrefix", trigger) {
+      (batch, batchId) =>
         if (!batch.isEmpty) {
           val b = batch.localCheckpoint() // read once per op, not per plan
           graft.store.CrossStoreTx.execute(batch.sparkSession, coordDir,
@@ -186,11 +185,11 @@ object Ingest {
           // go (their GC'd ids fold into the horizon file — a too-deep
           // replay is refused loudly, never silently re-executed). Keeps
           // execute()'s recover listing O(pending), not O(total batches).
-          // HORIZON-ONLY (retainMs = ∞): the writer GC's exactly its own
+          // HORIZON-ONLY (retainMs = ∞): the ingest GC's exactly its own
           // prefix's provably-unreplayable batches — an age sweep here
           // could drop a DIFFERENT stream's (or a manual tx's) last
           // marker in a shared coordinator dir while that stream idles,
-          // turning its in-contract replay into a refusal. Each writer
+          // turning its in-contract replay into a refusal. Each ingest
           // bounds its own prefix; free-form names are the operator's
           // vacuumRetired(retainMs) call.
           graft.store.CrossStoreTx.vacuumRetired(batch.sparkSession,
@@ -198,14 +197,7 @@ object Ingest {
             batchHorizon = Some((namePrefix, batchId)))
           ()
         }
-      }
-
-  def startCrossStoreIngest(stream: DataFrame, coordDir: String,
-                            namePrefix: String,
-                            ops: DataFrame => Seq[graft.store.CrossStoreTx.Op],
-                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    crossStoreCommitWriter(stream, coordDir, namePrefix, ops)
-      .trigger(trigger).start()
+    }
 
   /** Micro-batch ingest into a [[graft.store.VersionedCandleStore]]:
     * each micro-batch becomes ONE journaled transaction, so streaming
@@ -218,80 +210,60 @@ object Ingest {
     * (see `VersionedCandleStore.commit`) instead of minting a phantom
     * transaction.
     *
-    * `views` + `viewRefreshEvery`: incrementally-maintained aggregate
-    * views over the SAME store refresh in-loop after each
-    * `viewRefreshEvery`-th batch commits (the `compactEvery` shape) —
-    * a streamed store's views stay fresh without an external driver,
-    * and each refresh reads only the new batch's touched groups off
-    * the change feed.
+    * `views`: incrementally-maintained aggregate views over the SAME
+    * store refresh in-loop after every committed batch — a streamed
+    * store's views stay fresh without an external driver, and each
+    * refresh reads only the new batch's touched groups off the change
+    * feed.
     */
-  def versionedCommitWriter(stream: DataFrame,
-                            store: graft.store.VersionedCandleStore,
-                            checkpointDir: String,
-                            transform: DataFrame => DataFrame = identity,
-                            views: Seq[graft.store.IncrementalView] = Seq.empty,
-                            viewRefreshEvery: Int = 1): DataStreamWriter[Row] = {
-    require(views.isEmpty || viewRefreshEvery > 0,
-      s"viewRefreshEvery must be positive when views are wired " +
-        s"(got $viewRefreshEvery) — a non-positive interval would " +
-        "silently never refresh them")
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          store.commit(transform(batch), batchId = Some(batchId))
-          // auto-refresh AFTER the commit (the compactEvery pattern):
-          // the stream's views stay fresh without an external driver.
-          // Safe under every streaming failure mode — a foreachBatch
-          // RETRY re-runs refresh() as a watermark-current no-op after
-          // the commit's own batch-id replay guard no-ops; a refresh
-          // racing a slow reserve-then-journal committer records the
-          // gap run in the generation meta and repairs it on the next
-          // refresh (IncrementalView's out-of-order protocol). Each
-          // refresh stamps the _refresh.lock with THIS stream's
-          // checkpoint as owner, and a lock observed at refresh time is
-          // broken ONLY when it carries that same stamp — provably a
-          // dead prior incarnation of this very stream (Spark admits
-          // one active query per checkpoint, and foreachBatch
-          // serializes batches within it). A FOREIGN or unstamped lock
-          // — a concurrent manual refresh(), a second stream wired to
-          // the same view path — is possibly live, so the batch fails
-          // loudly instead of silently deleting it (the concurrent-
-          // refresh generation-GC race the lock exists to prevent).
-          if (views.nonEmpty && batchId % viewRefreshEvery == 0) {
-            val owner = s"graft-stream:$checkpointDir"
-            views.foreach { v =>
-              try v.refresh(owner)
-              catch {
-                case e: IllegalStateException
-                    if e.getMessage.contains("_refresh.lock") =>
-                  if (v.breakLockIfOwner(owner)) v.refresh(owner)
-                  else throw new IllegalStateException(
-                    s"view at ${v.path}: _refresh.lock is held by a " +
-                      "refresher this stream does not own (a concurrent " +
-                      "manual refresh() or another stream) — refusing to " +
-                      "break a possibly-live lock. Stop the other " +
-                      "refresher, or breakStaleLock() manually if its " +
-                      "owner died hard.", e)
-              }
-            }
-          }
-          ()
-        }
-      }
-  }
-
   def startVersionedIngest(stream: DataFrame,
                            store: graft.store.VersionedCandleStore,
                            checkpointDir: String,
                            trigger: Trigger = Trigger.AvailableNow(),
                            transform: DataFrame => DataFrame = identity,
-                           views: Seq[graft.store.IncrementalView] = Seq.empty,
-                           viewRefreshEvery: Int = 1): StreamingQuery =
-    versionedCommitWriter(stream, store, checkpointDir, transform, views,
-      viewRefreshEvery)
-      .trigger(trigger).start()
+                           views: Seq[graft.store.IncrementalView] = Seq.empty): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        store.commit(transform(batch), batchId = Some(batchId))
+        // auto-refresh AFTER the commit: the stream's views stay fresh
+        // without an external driver.
+        // Safe under every streaming failure mode — a foreachBatch
+        // RETRY re-runs refresh() as a watermark-current no-op after
+        // the commit's own batch-id replay guard no-ops; a refresh
+        // racing a slow reserve-then-journal committer records the
+        // gap run in the generation meta and repairs it on the next
+        // refresh (IncrementalView's out-of-order protocol). Each
+        // refresh stamps the _refresh.lock with THIS stream's
+        // checkpoint as owner, and a lock observed at refresh time is
+        // broken ONLY when it carries that same stamp — provably a
+        // dead prior incarnation of this very stream (Spark admits
+        // one active query per checkpoint, and foreachBatch
+        // serializes batches within it). A FOREIGN or unstamped lock
+        // — a concurrent manual refresh(), a second stream wired to
+        // the same view path — is possibly live, so the batch fails
+        // loudly instead of silently deleting it (the concurrent-
+        // refresh generation-GC race the lock exists to prevent).
+        if (views.nonEmpty) {
+          val owner = s"graft-stream:$checkpointDir"
+          views.foreach { v =>
+            try v.refresh(owner)
+            catch {
+              case e: IllegalStateException
+                  if e.getMessage.contains("_refresh.lock") =>
+                if (v.breakLockIfOwner(owner)) v.refresh(owner)
+                else throw new IllegalStateException(
+                  s"view at ${v.path}: _refresh.lock is held by a " +
+                    "refresher this stream does not own (a concurrent " +
+                    "manual refresh() or another stream) — refusing to " +
+                    "break a possibly-live lock. Stop the other " +
+                    "refresher, or breakStaleLock() manually if its " +
+                    "owner died hard.", e)
+            }
+          }
+        }
+        ()
+      }
+    }
 
   /** STATEFUL in-flight curation: bloom decontamination at ingest
     * (SURVEY.md §2.3's in-flight-curation row, extended past stateless
@@ -327,24 +299,22 @@ object Ingest {
     * history is a ~1.8 GB build input and a ~MB-scale bitmap literal);
     * the exact verify joins CANDIDATE grams only.
     */
-  def decontaminatingIngestWriter(stream: DataFrame, stateDir: String,
-                                  checkpointDir: String,
-                                  idCol: String = "doc_id",
-                                  textCol: String = "text",
-                                  shingleN: Int = 5,
-                                  fpp: Double = 0.001,
-                                  compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // compact BEFORE the batch (upTo = batchId is strictly earlier
-        // even for a retry of this very batch), so history listing and
-        // small-file count stay O(compactEvery) on a long-lived stream
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDecontaminationState(batch.sparkSession, stateDir, batchId)
-        curateBatch(batch, batchId, stateDir, idCol, textCol, shingleN, fpp)
-      }
+  def startDecontaminatingIngest(stream: DataFrame, stateDir: String,
+                                 checkpointDir: String,
+                                 idCol: String = "doc_id",
+                                 textCol: String = "text",
+                                 shingleN: Int = 5,
+                                 fpp: Double = 0.001,
+                                 trigger: Trigger = Trigger.AvailableNow(),
+                                 compactEvery: Int = 0): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      // compact BEFORE the batch (upTo = batchId is strictly earlier
+      // even for a retry of this very batch), so history listing and
+      // small-file count stay O(compactEvery) on a long-lived stream
+      if (onCadence(compactEvery, batchId))
+        compactDecontaminationState(batch.sparkSession, stateDir, batchId)
+      curateBatch(batch, batchId, stateDir, idCol, textCol, shingleN, fpp)
+    }
 
   /** One micro-batch of the decontaminating ingest — split out so the
     * differential spec can drive it directly.
@@ -373,26 +343,16 @@ object Ingest {
     val survivors = b.join(flaggedM.select(col(idCol)), Seq(idCol), "left_anti")
       .localCheckpoint()
     // three independent sinks over checkpointed inputs (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => survivors.write.mode("overwrite")
         .parquet(s"$stateDir/docs/batch_$batchId"),
       () => flaggedM.write.mode("overwrite")
         .parquet(s"$stateDir/quarantine/batch_$batchId"),
       () => graft.llm.Dedup.textGramHashes(survivors, idCol, textCol, shingleN)
         .select("gram_hash").distinct()
-        .write.mode("overwrite").parquet(s"$stateDir/grams/batch_$batchId"))
+        .write.mode("overwrite").parquet(s"$stateDir/grams/batch_$batchId")))
     ()
   }
-
-  def startDecontaminatingIngest(stream: DataFrame, stateDir: String,
-                                 checkpointDir: String,
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 shingleN: Int = 5,
-                                 fpp: Double = 0.001,
-                                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    decontaminatingIngestWriter(stream, stateDir, checkpointDir, idCol,
-      textCol, shingleN, fpp).trigger(trigger).start()
 
   /** STATEFUL in-flight near-dup marking at ingest: first-wins MinHash
     * +LSH dedup against EVERYTHING ALREADY SEEN. Each micro-batch
@@ -435,27 +395,20 @@ object Ingest {
     * state by a band-hash prefix and compact `bands/` periodically —
     * the per-batch dirs are already the unit of that rewrite.
     */
-  def nearDupIngestWriter(stream: DataFrame, stateDir: String,
-                          checkpointDir: String,
-                          idCol: String = "doc_id",
-                          textCol: String = "text",
-                          shingleN: Int = 3, k: Int = 32,
-                          bands: Int = 8,
-                          threshold: Double = 0.5,
-                          compactEvery: Int = 0,
-                          reclusterEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (reclusterEvery > 0 && batchId > 0 && batchId % reclusterEvery == 0)
-          reclusterNearDupFlags(batch.sparkSession, stateDir, batchId,
-            shingleN, threshold)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactNearDupState(batch.sparkSession, stateDir, batchId)
-        nearDupBatch(batch, batchId, stateDir, idCol, textCol, shingleN,
-          k, bands, threshold)
-      }
+  def startNearDupIngest(stream: DataFrame, stateDir: String,
+                         checkpointDir: String,
+                         idCol: String = "doc_id",
+                         textCol: String = "text",
+                         shingleN: Int = 3, k: Int = 32, bands: Int = 8,
+                         threshold: Double = 0.5,
+                         compactEvery: Int = 0,
+                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactNearDupState(batch.sparkSession, stateDir, batchId)
+      nearDupBatch(batch, batchId, stateDir, idCol, textCol, shingleN,
+        k, bands, threshold)
+    }
 
   /** One micro-batch of the near-dup-marking ingest — split out so the
     * differential spec can drive it directly.
@@ -528,7 +481,7 @@ object Ingest {
       .localCheckpoint()
     // four independent sinks over checkpointed inputs — concurrent
     // (guide §2.6); serial they each paid the full job latency in turn
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => flags.select(col("_fid").as(idCol), col("n_pairs"), col("max_jaccard"))
         .write.mode("overwrite").parquet(s"$stateDir/flags/batch_$batchId"),
       () => b.join(flags, b(idCol).cast("long") === col("_fid"), "left_anti")
@@ -536,7 +489,7 @@ object Ingest {
       () => b.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
         .write.mode("overwrite").parquet(s"$stateDir/all/batch_$batchId"),
       () => banded.select(col("band"), col("id"))
-        .write.mode("overwrite").parquet(s"$stateDir/bands/batch_$batchId"))
+        .write.mode("overwrite").parquet(s"$stateDir/bands/batch_$batchId")))
     ()
   }
 
@@ -677,7 +630,7 @@ object Ingest {
     * its component's keep-best winner is someone else, with
     * `(n_pairs, max_jaccard)` recomputed over its VERIFIED pairs.
     * Verdict-feed consumers read through [[nearDupFlags]] (floors-
-    * aware); the ingest writer adopts via `reclusterEvery` — later
+    * aware); the caller runs it between batches — later
     * batches keep flagging first-wins against the unchanged
     * `bands/`+`all/` probe state (the re-cluster rewrites verdicts,
     * never the probe state, so stream parity for NEW arrivals is
@@ -750,19 +703,6 @@ object Ingest {
     pinnedRead(spark, dirs)
   }
 
-  def startNearDupIngest(stream: DataFrame, stateDir: String,
-                         checkpointDir: String,
-                         idCol: String = "doc_id",
-                         textCol: String = "text",
-                         shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                         threshold: Double = 0.5,
-                         compactEvery: Int = 0,
-                         reclusterEvery: Int = 0,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    nearDupIngestWriter(stream, stateDir, checkpointDir, idCol, textCol,
-      shingleN, k, bands, threshold, compactEvery, reclusterEvery)
-      .trigger(trigger).start()
-
   /** STATEFUL distribution-drift monitoring at ingest: each
     * micro-batch's hashed-unigram histogram is compared (Jensen-
     * Shannon divergence, the [[graft.llm.Corpus.sourceDrift]] measure)
@@ -788,20 +728,18 @@ object Ingest {
     * nBuckets-row join. Nothing corpus-sized ever recomputes, and no
     * text rides a shuffle.
     */
-  def driftMonitorIngestWriter(stream: DataFrame, stateDir: String,
-                               checkpointDir: String,
-                               textCol: String = "text",
-                               nBuckets: Long = 256L,
-                               alarmAt: Double = 0.1,
-                               compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDriftState(batch.sparkSession, stateDir, batchId)
-        driftBatch(batch, batchId, stateDir, textCol, nBuckets, alarmAt)
-      }
+  def startDriftMonitorIngest(stream: DataFrame, stateDir: String,
+                              checkpointDir: String,
+                              textCol: String = "text",
+                              nBuckets: Long = 256L,
+                              alarmAt: Double = 0.1,
+                              trigger: Trigger = Trigger.AvailableNow(),
+                              compactEvery: Int = 0): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactDriftState(batch.sparkSession, stateDir, batchId)
+      driftBatch(batch, batchId, stateDir, textCol, nBuckets, alarmAt)
+    }
 
   /** One micro-batch of the drift monitor — split out so the
     * differential spec can drive it directly.
@@ -862,22 +800,13 @@ object Ingest {
       lit(jsDiv >= alarmAt && histDirs.nonEmpty).as("alarm"))
     // two independent sinks (report is a 1-row literal frame, hist is
     // checkpointed) — concurrent (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => report.write.mode("overwrite")
         .parquet(s"$stateDir/drift/batch_$batchId"),
       () => hist.write.mode("overwrite")
-        .parquet(s"$stateDir/hist/batch_$batchId"))
+        .parquet(s"$stateDir/hist/batch_$batchId")))
     ()
   }
-
-  def startDriftMonitorIngest(stream: DataFrame, stateDir: String,
-                              checkpointDir: String,
-                              textCol: String = "text",
-                              nBuckets: Long = 256L,
-                              alarmAt: Double = 0.1,
-                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    driftMonitorIngestWriter(stream, stateDir, checkpointDir, textCol,
-      nBuckets, alarmAt).trigger(trigger).start()
 
   /** STATEFUL per-source token-budget enforcement at ingest: each
     * source admits documents in arrival order (micro-batch, then the
@@ -908,24 +837,22 @@ object Ingest {
     * run the batch operator's distributed prefix sum offline); at
     * streaming batch sizes the window is the right tool.
     */
-  def quotaIngestWriter(stream: DataFrame, stateDir: String,
-                        checkpointDir: String,
-                        idCol: String = "doc_id",
-                        keyCol: String = "source",
-                        nTokensCol: String = "n_tokens",
-                        budgets: Map[String, Long] = Map.empty,
-                        defaultBudget: Long = Long.MaxValue,
-                        salt: String = "budget",
-                        compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactQuotaState(batch.sparkSession, stateDir, batchId)
-        quotaBatch(batch, batchId, stateDir, idCol, keyCol, nTokensCol,
-          budgets, defaultBudget, salt)
-      }
+  def startQuotaIngest(stream: DataFrame, stateDir: String,
+                       checkpointDir: String,
+                       idCol: String = "doc_id",
+                       keyCol: String = "source",
+                       nTokensCol: String = "n_tokens",
+                       budgets: Map[String, Long] = Map.empty,
+                       defaultBudget: Long = Long.MaxValue,
+                       salt: String = "budget",
+                       trigger: Trigger = Trigger.AvailableNow(),
+                       compactEvery: Int = 0): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactQuotaState(batch.sparkSession, stateDir, batchId)
+      quotaBatch(batch, batchId, stateDir, idCol, keyCol, nTokensCol,
+        budgets, defaultBudget, salt)
+    }
 
   /** One micro-batch of the quota ingest — split out so the
     * differential spec can drive it directly.
@@ -966,7 +893,7 @@ object Ingest {
       .drop("_k", "_prior", "_within")
       .localCheckpoint() // read by admitted + dropped dumps
     // three independent sinks over checkpointed inputs (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => cum.where(col("cum_tokens") <= budget)
         .write.mode("overwrite").parquet(s"$stateDir/docs/batch_$batchId"),
       () => cum.where(col("cum_tokens") > budget)
@@ -974,21 +901,9 @@ object Ingest {
         .write.mode("overwrite").parquet(s"$stateDir/dropped/batch_$batchId"),
       () => b.groupBy(col(keyCol).as("key"))
         .agg(sum(col(nTokensCol).cast("long")).as("tokens"))
-        .write.mode("overwrite").parquet(s"$stateDir/totals/batch_$batchId"))
+        .write.mode("overwrite").parquet(s"$stateDir/totals/batch_$batchId")))
     ()
   }
-
-  def startQuotaIngest(stream: DataFrame, stateDir: String,
-                       checkpointDir: String,
-                       idCol: String = "doc_id",
-                       keyCol: String = "source",
-                       nTokensCol: String = "n_tokens",
-                       budgets: Map[String, Long] = Map.empty,
-                       defaultBudget: Long = Long.MaxValue,
-                       salt: String = "budget",
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    quotaIngestWriter(stream, stateDir, checkpointDir, idCol, keyCol,
-      nTokensCol, budgets, defaultBudget, salt).trigger(trigger).start()
 
   /** STATEFUL exact dedup at ingest: first-wins duplicate dropping by
     * normalized text digest against EVERYTHING ALREADY SEEN — the
@@ -1012,19 +927,17 @@ object Ingest {
     * batch-sized. At extreme history, bucket `hashes/` by digest
     * prefix so the probe prunes at the file level.
     */
-  def exactDedupIngestWriter(stream: DataFrame, stateDir: String,
-                             checkpointDir: String,
-                             idCol: String = "doc_id",
-                             textCol: String = "text",
-                             compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactExactDedupState(batch.sparkSession, stateDir, batchId)
-        exactDedupBatch(batch, batchId, stateDir, idCol, textCol)
-      }
+  def startExactDedupIngest(stream: DataFrame, stateDir: String,
+                            checkpointDir: String,
+                            idCol: String = "doc_id",
+                            textCol: String = "text",
+                            trigger: Trigger = Trigger.AvailableNow(),
+                            compactEvery: Int = 0): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactExactDedupState(batch.sparkSession, stateDir, batchId)
+      exactDedupBatch(batch, batchId, stateDir, idCol, textCol)
+    }
 
   /** One micro-batch of the exact-dedup ingest — split out so the
     * differential spec can drive it directly.
@@ -1066,23 +979,15 @@ object Ingest {
       .select(col(idCol))
       .localCheckpoint()
     // three independent sinks over checkpointed inputs (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => b.join(flagged, Seq(idCol), "left_anti").drop("_digest")
         .write.mode("overwrite").parquet(s"$stateDir/docs/batch_$batchId"),
       () => flagged.write.mode("overwrite")
         .parquet(s"$stateDir/dups/batch_$batchId"),
       () => b.select(col("_digest")).distinct()
-        .write.mode("overwrite").parquet(s"$stateDir/hashes/batch_$batchId"))
+        .write.mode("overwrite").parquet(s"$stateDir/hashes/batch_$batchId")))
     ()
   }
-
-  def startExactDedupIngest(stream: DataFrame, stateDir: String,
-                            checkpointDir: String,
-                            idCol: String = "doc_id",
-                            textCol: String = "text",
-                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    exactDedupIngestWriter(stream, stateDir, checkpointDir, idCol, textCol)
-      .trigger(trigger).start()
 
   /** STATEFUL distinct-counting at ingest via MERGEABLE HLL sketches
     * (Apache DataSketches, Spark's `hll_sketch_agg` family): each
@@ -1104,20 +1009,18 @@ object Ingest {
     *  - `counts/batch_<id>/`   — the running (key, distinct_tokens)
     *    report as of this batch.
     */
-  def hllDistinctIngestWriter(stream: DataFrame, stateDir: String,
-                              checkpointDir: String,
-                              textCol: String = "text",
-                              keyCol: String = "source",
-                              lgK: Int = 12,
-                              compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactHllState(batch.sparkSession, stateDir, batchId)
-        hllDistinctBatch(batch, batchId, stateDir, textCol, keyCol, lgK)
-      }
+  def startHllDistinctIngest(stream: DataFrame, stateDir: String,
+                             checkpointDir: String,
+                             textCol: String = "text",
+                             keyCol: String = "source",
+                             lgK: Int = 12,
+                             trigger: Trigger = Trigger.AvailableNow(),
+                             compactEvery: Int = 0): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactHllState(batch.sparkSession, stateDir, batchId)
+      hllDistinctBatch(batch, batchId, stateDir, textCol, keyCol, lgK)
+    }
 
   /** One micro-batch of the HLL-distinct ingest — split out so the
     * differential spec can drive it directly.
@@ -1142,24 +1045,15 @@ object Ingest {
       else sk.unionByName(pinnedRead(spark, histDirs))
     // two independent sinks over the checkpointed batch sketches
     // (guide §2.6); the running report reads history, not the new dump
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => sk.write.mode("overwrite")
         .parquet(s"$stateDir/sketches/batch_$batchId"),
       () => all.groupBy(col("key"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))
           .as("distinct_tokens"))
-        .write.mode("overwrite").parquet(s"$stateDir/counts/batch_$batchId"))
+        .write.mode("overwrite").parquet(s"$stateDir/counts/batch_$batchId")))
     ()
   }
-
-  def startHllDistinctIngest(stream: DataFrame, stateDir: String,
-                             checkpointDir: String,
-                             textCol: String = "text",
-                             keyCol: String = "source",
-                             lgK: Int = 12,
-                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    hllDistinctIngestWriter(stream, stateDir, checkpointDir, textCol,
-      keyCol, lgK).trigger(trigger).start()
 
   /** STATEFUL streaming ANN indexing at ingest: the IVF index built
     * incrementally as embedding batches arrive — "index the crawl as
@@ -1211,47 +1105,49 @@ object Ingest {
     * scale, partition `cells/` state by cell_id so probes prune at the
     * file level.
     */
-  def ivfIndexIngestWriter(stream: DataFrame, stateDir: String,
-                           checkpointDir: String,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           nCells: Int = 16, iters: Int = 5,
-                           compactEvery: Int = 0,
-                           refreshEvery: Int = 0,
-                           refreshOnDriftFactor: Double = 0.0,
-                           reshardEvery: Int = 0,
-                           targetCorpusSize: Long = 0): DataStreamWriter[Row] = {
-    require(reshardEvery <= 0 || (refreshEvery <= 0 && refreshOnDriftFactor <= 0),
-      "reshardEvery and refreshEvery/refreshOnDriftFactor are the same " +
-        "re-train with different cell-count policies (√N-derived vs " +
-        "frozen) — a drift-fired refresh after a re-shard would supersede " +
-        "the √N generation back to the frozen width; set one policy only")
+  def startIvfIndexIngest(stream: DataFrame, stateDir: String,
+                          checkpointDir: String,
+                          idCol: String = "vec_id",
+                          vecCol: String = "embedding",
+                          nCells: Int = 16, iters: Int = 5,
+                          refreshEvery: Int = 0,
+                          reshardEvery: Int = 0,
+                          targetCorpusSize: Long = 0,
+                          trigger: Trigger = Trigger.AvailableNow(),
+                          compactEvery: Int = 0): StreamingQuery = {
+    require(reshardEvery <= 0 || refreshEvery <= 0,
+      "reshardEvery and refreshEvery are the same re-train with " +
+        "different cell-count policies (√N-derived vs frozen) — a " +
+        "refresh after a re-shard would supersede the √N generation " +
+        "back to the frozen width; set one policy only")
     val cells0 =
       if (targetCorpusSize > 0)
         graft.llm.Similarity.sqrtIvfParams(targetCorpusSize)._1
       else nCells
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (reshardEvery > 0 && batchId > 0 && batchId % reshardEvery == 0)
-          reshardIvfIndex(batch.sparkSession, stateDir, batchId, iters)
-        else if (refreshEvery > 0 && batchId > 0 && batchId % refreshEvery == 0)
-          refreshIvfIndex(batch.sparkSession, stateDir, batchId, cells0, iters)
-        else if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIvfIndexState(batch.sparkSession, stateDir, batchId)
-        if (refreshOnDriftFactor > 0) {
-          // ONE materialization feeds both the trigger's quality scans
-          // and the assignment/state dump (guide §5: reuse-justified)
-          val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
-            .localCheckpoint()
-          driftTriggeredRefresh(b, batchId, stateDir, vecCol, cells0,
-            iters, refreshOnDriftFactor)
-          ivfIndexBatch(b, batchId, stateDir, idCol, vecCol, cells0, iters,
-            materialized = true)
-        } else
-          ivfIndexBatch(batch, batchId, stateDir, idCol, vecCol, cells0, iters)
-      }
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(reshardEvery, batchId))
+        reshardIvfIndex(batch.sparkSession, stateDir, batchId, iters)
+      else if (onCadence(refreshEvery, batchId))
+        refreshIvfIndex(batch.sparkSession, stateDir, batchId, cells0, iters)
+      else if (onCadence(compactEvery, batchId))
+        compactIvfIndexState(batch.sparkSession, stateDir, batchId)
+      ivfIndexBatch(batch, batchId, stateDir, idCol, vecCol, cells0, iters)
+    }
+  }
+
+  /** Floors-aware read of the drift-trigger's quality history — a
+    * `qstats/batch_*` glob would miss `compact_upto_*` generations
+    * once [[compactIvfIndexState]] has folded them (the merged row
+    * keeps `refreshed = max` and `batch_id = max`, so existence-style
+    * gates survive compaction through this reader).
+    */
+  def ivfQstats(spark: org.apache.spark.sql.SparkSession,
+                stateDir: String): DataFrame = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
+    val dirs = historyDirs(fs, stateDir, "qstats", Long.MaxValue)
+    require(dirs.nonEmpty, s"no qstats state under $stateDir/qstats")
+    pinnedRead(spark, dirs)
   }
 
   /** SELF-HEALING trigger for [[refreshIvfIndex]], evaluated per batch
@@ -1261,8 +1157,10 @@ object Ingest {
     * history's running mean. A drop below `factor × histMean` means
     * the frozen quantizer no longer describes what is arriving —
     * re-train BEFORE assigning this batch. This is the embedding-space
-    * sibling of the q9E text-drift alarm, wired inline so the index
-    * heals without an operator in the loop.
+    * sibling of the q9E text-drift alarm: a caller driving the
+    * per-batch bodies runs it on the materialized batch before
+    * [[ivfIndexBatch]] (`materialized = true`), so the index heals
+    * without an operator in the loop (q9X).
     *
     * State: `qstats/batch_<id>` — one row `(batch_id, n,
     * mean_best_cos, hist_mean, refreshed)`, recorded under the FINAL
@@ -1281,34 +1179,18 @@ object Ingest {
     * armed, and the NEXT refresh trains on data that includes the
     * drift (spec-asserted). The factor guard assumes a healthy
     * history mean > 0; corpora whose best-cos is legitimately ≤ 0
-    * need an absolute external trigger instead. Pair the trigger with
-    * `compactEvery` on long-lived streams: the qstats history (one
-    * 1-row dir per batch) compacts on that boundary
-    * ([[compactIvfIndexState]] folds it n-weighted), like every other
-    * substream's state.
+    * need an absolute external trigger instead. On long-lived streams
+    * pair the trigger with periodic [[compactIvfIndexState]]: the
+    * qstats history (one 1-row dir per batch) folds n-weighted there,
+    * like every other substream's state.
     */
-  /** Floors-aware read of the drift-trigger's quality history — a
-    * `qstats/batch_*` glob would miss `compact_upto_*` generations
-    * once [[compactIvfIndexState]] has folded them (the merged row
-    * keeps `refreshed = max` and `batch_id = max`, so existence-style
-    * gates survive compaction through this reader).
-    */
-  def ivfQstats(spark: org.apache.spark.sql.SparkSession,
-                stateDir: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
-    val dirs = historyDirs(fs, stateDir, "qstats", Long.MaxValue)
-    require(dirs.nonEmpty, s"no qstats state under $stateDir/qstats")
-    pinnedRead(spark, dirs)
-  }
-
   private[graft] def driftTriggeredRefresh(batch: DataFrame, batchId: Long,
                                            stateDir: String, vecCol: String,
                                            nCells: Int, iters: Int,
                                            factor: Double): Unit = {
     import graft.llm.Similarity
     require(factor > 0 && factor < 1,
-      s"refreshOnDriftFactor must be in (0, 1): a batch triggers when its " +
+      s"factor must be in (0, 1): a batch triggers when its " +
         s"mean best-cos drops below factor x history mean; got $factor")
     if (batch.isEmpty) return
     val spark = batch.sparkSession
@@ -1555,7 +1437,7 @@ object Ingest {
   }
 
   /** STATEFUL streaming IVFADC (PQ) indexing at ingest — the
-    * [[ivfIndexIngestWriter]] scale variant whose state stores
+    * [[startIvfIndexIngest]] scale variant whose state stores
     * `(cell_id, id, code)` with `code` the m-byte product-quantized
     * per-cell residual ([[graft.llm.Similarity.ivfPqTopK]]'s coding,
     * Jégou et al. 2011 §IV.A) INSTEAD of the raw vector: state
@@ -1582,40 +1464,6 @@ object Ingest {
     * the first-batch-frozen cell count makes per-probe ADC scans grow
     * as Θ(N) — measured linear at a 100× decade.
     */
-  def ivfPqIndexIngestWriter(stream: DataFrame, stateDir: String,
-                             checkpointDir: String,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             nCells: Int = 16, iters: Int = 5,
-                             m: Int = 8, ks: Int = 256,
-                             compactEvery: Int = 0,
-                             reshardEvery: Int = 0,
-                             reshardWith: DataFrame = null,
-                             targetCorpusSize: Long = 0,
-                             keepRaw: Boolean = false): DataStreamWriter[Row] = {
-    require(reshardEvery <= 0 || reshardWith != null || keepRaw,
-      "reshardEvery > 0 requires raw vectors to re-encode from: pass " +
-        "reshardWith (the source table) or set keepRaw = true (the " +
-        "index keeps its own raw-vector sidecar; ~dim*8/m x the code " +
-        "state's bytes)")
-    val cells0 =
-      if (targetCorpusSize > 0)
-        graft.llm.Similarity.sqrtIvfParams(targetCorpusSize)._1
-      else nCells
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (reshardEvery > 0 && batchId > 0 && batchId % reshardEvery == 0)
-          reshardIvfPqIndex(batch.sparkSession, stateDir, reshardWith,
-            idCol, vecCol, batchId, iters = iters)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIvfPqIndexState(batch.sparkSession, stateDir, batchId)
-        ivfPqIndexBatch(batch, batchId, stateDir, idCol, vecCol, cells0,
-          iters, m, ks, keepRaw)
-      }
-  }
-
   def startIvfPqIndexIngest(stream: DataFrame, stateDir: String,
                             checkpointDir: String,
                             idCol: String = "vec_id",
@@ -1627,10 +1475,26 @@ object Ingest {
                             reshardWith: DataFrame = null,
                             targetCorpusSize: Long = 0,
                             keepRaw: Boolean = false,
-                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    ivfPqIndexIngestWriter(stream, stateDir, checkpointDir, idCol, vecCol,
-      nCells, iters, m, ks, compactEvery, reshardEvery, reshardWith,
-      targetCorpusSize, keepRaw).trigger(trigger).start()
+                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    require(reshardEvery <= 0 || reshardWith != null || keepRaw,
+      "reshardEvery > 0 requires raw vectors to re-encode from: pass " +
+        "reshardWith (the source table) or set keepRaw = true (the " +
+        "index keeps its own raw-vector sidecar; ~dim*8/m x the code " +
+        "state's bytes)")
+    val cells0 =
+      if (targetCorpusSize > 0)
+        graft.llm.Similarity.sqrtIvfParams(targetCorpusSize)._1
+      else nCells
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(reshardEvery, batchId))
+        reshardIvfPqIndex(batch.sparkSession, stateDir, reshardWith,
+          idCol, vecCol, batchId, iters = iters)
+      if (onCadence(compactEvery, batchId))
+        compactIvfPqIndexState(batch.sparkSession, stateDir, batchId)
+      ivfPqIndexBatch(batch, batchId, stateDir, idCol, vecCol, cells0,
+        iters, m, ks, keepRaw)
+    }
+  }
 
   /** One micro-batch of the PQ-index ingest — split out so the
     * differential spec can drive it directly. `keepRaw` additionally
@@ -1656,7 +1520,7 @@ object Ingest {
       vecCol, nCells, iters, m, ks)
     // the raw sidecar and the code state are independent sinks over the
     // checkpointed batch — concurrent (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => if (keepRaw)
         // the batch stamp makes re-ingested ids LAST-WINS across the
         // sidecar (the source-table path always joins the latest row;
@@ -1666,7 +1530,7 @@ object Ingest {
           .write.mode("overwrite").parquet(s"$stateDir/raw/batch_$batchId"),
       () => writeCellState(
         Similarity.encodeIvfPq(b, idCol, vecCol, cents, books, m, ks),
-        s"$stateDir/codes/batch_$batchId", cents.length))
+        s"$stateDir/codes/batch_$batchId", cents.length)))
     ()
   }
 
@@ -1860,7 +1724,7 @@ object Ingest {
     * accumulated id set against the source per re-shard, the cost an
     * offline rebuild would pay anyway, amortized over `reshardEvery`
     * batches. With `source = null` the re-encode instead reads the
-    * index's own `raw/` sidecar (the writer's `keepRaw = true` opt-in
+    * index's own `raw/` sidecar (the ingest's `keepRaw = true` opt-in
     * — ~dim·8/m × the code state's bytes, the storage trade for a
     * source-independent index), which is then compacted to the same
     * floor and GC'd alongside the other substreams so listings stay
@@ -1930,7 +1794,7 @@ object Ingest {
           require(rawDirs.nonEmpty,
             s"PQ re-shard under $stateDir: no source table supplied and " +
               "no raw/ sidecar found — pass the source table or run the " +
-              "writer with keepRaw = true")
+              "ingest with keepRaw = true")
           dedupRaw(pinnedRead(spark, rawDirs)).select("id", "vec")
         }
       val vecs = rawSrc.join(ids, Seq("id"))
@@ -2082,22 +1946,20 @@ object Ingest {
     * side BROADCAST — history never shuffles; the within-batch pass is
     * batch-sized. Exact cosine runs only on same-cell candidates.
     */
-  def embedDedupIngestWriter(stream: DataFrame, stateDir: String,
-                             checkpointDir: String,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             nCells: Int = 16, iters: Int = 5,
-                             threshold: Double = 0.95,
-                             compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIvfIndexState(batch.sparkSession, stateDir, batchId)
-        embedDedupBatch(batch, batchId, stateDir, idCol, vecCol, nCells,
-          iters, threshold)
-      }
+  def startEmbedDedupIngest(stream: DataFrame, stateDir: String,
+                            checkpointDir: String,
+                            idCol: String = "vec_id",
+                            vecCol: String = "embedding",
+                            nCells: Int = 16, iters: Int = 5,
+                            threshold: Double = 0.95,
+                            compactEvery: Int = 0,
+                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startForeachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (onCadence(compactEvery, batchId))
+        compactIvfIndexState(batch.sparkSession, stateDir, batchId)
+      embedDedupBatch(batch, batchId, stateDir, idCol, vecCol, nCells,
+        iters, threshold)
+    }
 
   /** One micro-batch of the embedding-dedup ingest — split out so the
     * differential spec can drive it directly.
@@ -2150,37 +2012,13 @@ object Ingest {
       .localCheckpoint()
     // two independent sinks (flags checkpointed; assigned is a pure
     // projection of the checkpointed batch) — concurrent (guide §2.6)
-    inParallelActions(
+    graft.Par.settleAll(Seq(
       () => flags.write.mode("overwrite")
         .parquet(s"$stateDir/flags/batch_$batchId"),
       // all-seen: flagged vectors still join the state (chain coverage)
-      () => writeCellState(assigned, s"$stateDir/cells/batch_$batchId", nCells))
+      () => writeCellState(assigned, s"$stateDir/cells/batch_$batchId", nCells)))
     ()
   }
-
-  def startEmbedDedupIngest(stream: DataFrame, stateDir: String,
-                            checkpointDir: String,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding",
-                            nCells: Int = 16, iters: Int = 5,
-                            threshold: Double = 0.95,
-                            compactEvery: Int = 0,
-                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embedDedupIngestWriter(stream, stateDir, checkpointDir, idCol, vecCol,
-      nCells, iters, threshold, compactEvery).trigger(trigger).start()
-
-  def startIvfIndexIngest(stream: DataFrame, stateDir: String,
-                          checkpointDir: String,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding",
-                          nCells: Int = 16, iters: Int = 5,
-                          refreshEvery: Int = 0,
-                          reshardEvery: Int = 0,
-                          targetCorpusSize: Long = 0,
-                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    ivfIndexIngestWriter(stream, stateDir, checkpointDir, idCol, vecCol,
-      nCells, iters, refreshEvery = refreshEvery, reshardEvery = reshardEvery,
-      targetCorpusSize = targetCorpusSize).trigger(trigger).start()
 
   /** The centroid generation a reader at `batchId` must use: the
     * newest `_SUCCESS`-complete `centroids/compact_upto_<k>` refresh
@@ -2377,7 +2215,7 @@ object Ingest {
     * floor or the new one fully readable, never a mix. Idempotent: an
     * existing complete generation at `upTo` makes the call a no-op, so
     * a foreachBatch retry that re-triggers compaction converges.
-    * Single-writer (call from the ingest writer or between batches) —
+    * Single-writer (call from the ingest or between batches) —
     * the per-batch state writes themselves never touch compacted dirs.
     *
     * Ordering constraint: never compact past the stream's CURRENT
@@ -2476,7 +2314,7 @@ object Ingest {
     * batch `upTo`: per-batch sketches fold by `hll_union_agg` per key.
     * Union keeps the accuracy class; regrouping the fold can move an
     * estimate within the sketch's error band (see
-    * [[hllDistinctIngestWriter]]), which the spec gates.
+    * [[startHllDistinctIngest]]), which the spec gates.
     */
   def compactHllState(spark: org.apache.spark.sql.SparkSession,
                       stateDir: String, upTo: Long): Unit =
@@ -2545,7 +2383,7 @@ object Ingest {
     * per-batch rows fold to ONE row carrying (Σn, Σn·mean/Σn) — the
     * weighted mean is preserved exactly up to one fp divide/remultiply,
     * and the threshold compare is insensitive to that ulp. Without
-    * this, `refreshOnDriftFactor` streams list one 1-row dir per batch
+    * this, a drift-triggered index lists one 1-row qstats dir per batch
     * forever — the linear small-file growth every other substream
     * already compacts away.
     */

@@ -209,7 +209,7 @@ object StoreBench {
 
   /** Versioned streaming soak (`StoreBench vstream [nBatches]`, default
     * 500): a REAL Structured Streaming query commits one journaled tx
-    * per micro-batch through `Ingest.versionedCommitWriter` (MemoryStream
+    * per micro-batch through `Ingest.startVersionedIngest` (MemoryStream
     * + processAllAvailable per feed = one batch each), with the store's
     * auto-rollup keeping the journal O(interval). Gates: per-batch wall
     * flat across the horizon (tail-20 mean vs batches [10,30) within
@@ -232,9 +232,8 @@ object StoreBench {
       timestamp_seconds(lit(1609459200L) + col("k") * 60).as("ts"),
       col("v").as("open"), (col("v") + 1).as("high"), (col("v") - 1).as("low"),
       col("v").as("close"), lit(10.0).as("volume"), lit(0L).as("bit_fields"))
-    val q = graft.streaming.Ingest.versionedCommitWriter(stream, st, s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .start()
+    val q = graft.streaming.Ingest.startVersionedIngest(stream, st, s"$base/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     val walls = new Array[Double](nBatches)
     var i = 0
     val t0 = System.nanoTime()
@@ -313,7 +312,7 @@ object StoreBench {
   /** Cross-store streaming soak (`StoreBench xstream [nBatches]`,
     * default 500): a REAL Structured Streaming query drives ONE atomic
     * two-store transaction per micro-batch through
-    * `Ingest.crossStoreCommitWriter` (candle upsert + versioned commit
+    * `Ingest.startCrossStoreIngest` (candle upsert + versioned commit
     * under one 2PC marker). Gates:
     *  - per-batch wall FLAT across the horizon (phase-aligned medians,
     *    like the vstream soak) — the coordinator must not pay

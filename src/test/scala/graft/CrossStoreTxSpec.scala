@@ -127,9 +127,9 @@ class CrossStoreTxSpec extends SparkSpec {
       lit(60).as("candle_length"), col("t").cast("timestamp").as("ts"),
       col("o").as("open"), (col("o") + 1).as("high"), (col("o") - 1).as("low"),
       col("o").as("close"), lit(10.0).as("volume"), lit(0L).as("bit_fields"))
-    val q = graft.streaming.Ingest.crossStoreCommitWriter(rows, coord, "ing",
-      b => Seq(CandleUpsert(cs, b), VersionedCommit(vs, b)))
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
+    val q = graft.streaming.Ingest.startCrossStoreIngest(rows, coord, "ing",
+      b => Seq(CandleUpsert(cs, b), VersionedCommit(vs, b)),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     mem.addData(("BTC", "2022-01-01 10:00:00", 1.0))
     q.processAllAvailable()
     mem.addData(("ETH", "2022-01-01 10:00:00", 2.0))

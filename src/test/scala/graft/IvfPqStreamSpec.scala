@@ -398,12 +398,14 @@ class IvfPqStreamSpec extends SparkSpec {
       Ingest.reshardIvfPqIndex(spark, bare, null,
         "vec_id", "embedding", upTo = 2L, iters = 4))
     assert(e.getMessage.contains("keepRaw"), e.getMessage)
-    // the writer-level require admits keepRaw in place of reshardWith
+    // the ingest-level require admits keepRaw in place of reshardWith
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Float])]
-    Ingest.ivfPqIndexIngestWriter(mem.toDF().toDF("vec_id", "embedding"),
-      bare, tmpDir("pq-keepraw-ckpt"), reshardEvery = 3, keepRaw = true)
+    Ingest.startIvfPqIndexIngest(mem.toDF().toDF("vec_id", "embedding"),
+      bare, tmpDir("pq-keepraw-ckpt"), reshardEvery = 3, keepRaw = true,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      .stop()
   }
 
   test("torn re-shard is invisible at every crash prefix: centroids " +
@@ -519,11 +521,11 @@ class IvfPqStreamSpec extends SparkSpec {
       .MemoryStream[(Long, Seq[Float])]
     val stateDir = tmpDir("pq-writer")
     val ckpt = tmpDir("pq-writer-ckpt")
-    val writer = Ingest.ivfPqIndexIngestWriter(
+    val q = Ingest.startIvfPqIndexIngest(
       mem.toDF.toDF("vec_id", "embedding"), stateDir, ckpt,
       nCells = 4, iters = 4, m = m, ks = ks,
-      reshardEvery = 3, reshardWith = all)
-    val q = writer.start()
+      reshardEvery = 3, reshardWith = all,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     q.stop()
     // the re-shard fired at batch 3: adopted generation on disk, frozen
@@ -540,7 +542,7 @@ class IvfPqStreamSpec extends SparkSpec {
     assert(r >= 0.9, f"writer-wired re-shard recall $r%.3f")
     // requireds: reshardEvery without a source is a loud config error
     val err = intercept[IllegalArgumentException](
-      Ingest.ivfPqIndexIngestWriter(mem.toDF.toDF("vec_id", "embedding"),
+      Ingest.startIvfPqIndexIngest(mem.toDF.toDF("vec_id", "embedding"),
         stateDir, ckpt, reshardEvery = 3))
     assert(err.getMessage.contains("reshardWith"), err.getMessage)
   }

@@ -378,9 +378,9 @@ class ObjectStoreSimSpec extends SparkSpec {
       lit(60).as("candle_length"), col("t").cast("timestamp").as("ts"),
       col("o").as("open"), (col("o") + 1).as("high"), (col("o") - 1).as("low"),
       col("o").as("close"), lit(10.0).as("volume"), lit(0L).as("bit_fields"))
-    val q = graft.streaming.Ingest.crossStoreCommitWriter(rows, coord, "ing",
-      b => Seq(CandleUpsert(cs, b), VersionedCommit(vs, b)))
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
+    val q = graft.streaming.Ingest.startCrossStoreIngest(rows, coord, "ing",
+      b => Seq(CandleUpsert(cs, b), VersionedCommit(vs, b)),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     (0 until 4).foreach { i =>
       mem.addData((s"C$i", s"2022-01-0${i + 1} 10:00:00", i.toDouble))
       q.processAllAvailable()

@@ -100,8 +100,8 @@ class PropertySpec extends SparkSpec {
       val splits = b.grouped(1 + rnd.nextInt(math.max(1, b.size / 2))).toSeq
       val streamed = graft.store.CandleStore(spark, tmpDir(s"prop-st$i") + "/t")
       val stream = MemoryStream[Candle]
-      val q = graft.streaming.Ingest.upsertWriter(stream.toDF(), streamed, tmpDir(s"prop-ck$i"))
-        .trigger(Trigger.ProcessingTime(0)).start()
+      val q = graft.streaming.Ingest.startUpsertIngest(stream.toDF(), streamed, tmpDir(s"prop-ck$i"),
+        trigger = Trigger.ProcessingTime(0))
       splits.foreach { g => stream.addData(g); q.processAllAvailable() }
       q.stop()
       val batch = graft.store.CandleStore(spark, tmpDir(s"prop-bt$i") + "/t")

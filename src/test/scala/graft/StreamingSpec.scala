@@ -236,11 +236,10 @@ class StreamingSpec extends SparkSpec {
     // compactEvery = 1: every batch folds all earlier history into one
     // generation first — the differential below then ALSO proves the
     // auto-compaction path exact at every boundary
-    val query = Ingest.driftMonitorIngestWriter(
+    val query = Ingest.startDriftMonitorIngest(
       stream.toDF().toDF("doc_id", "text"), stateDir, ckpt,
-      compactEvery = 1)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      .start()
+      compactEvery = 1,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     var history = Map.empty[Long, Long]
     val expected = scala.collection.mutable.Map.empty[Long, (Long, Long, Double, Boolean)]
     for ((b, i) <- Seq(b1, b2, b3).zipWithIndex) {
@@ -311,10 +310,10 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[(Long, String, Int)]
     // compactEvery = 1: every boundary also proves the totals
     // compaction exact under the same differential
-    val query = Ingest.quotaIngestWriter(
+    val query = Ingest.startQuotaIngest(
       stream.toDF().toDF("doc_id", "source", "n_tokens"), stateDir, ckpt,
-      budgets = budgets, defaultBudget = 0L, compactEvery = 1)
-      .trigger(Trigger.ProcessingTime(0L)).start()
+      budgets = budgets, defaultBudget = 0L, compactEvery = 1,
+      trigger = Trigger.ProcessingTime(0L))
     for ((b, i) <- Seq(b1, b2, b3).zipWithIndex) {
       stream.addData(b: _*)
       query.processAllAvailable()
@@ -514,10 +513,9 @@ class StreamingSpec extends SparkSpec {
     // mirror the operator exactly with a trim+lower fold
     def norm(t: String) = t.trim.toLowerCase
     val stream = MemoryStream[(Long, String)]
-    val query = Ingest.exactDedupIngestWriter(
+    val query = Ingest.startExactDedupIngest(
       stream.toDF().toDF("doc_id", "text"), stateDir, ckpt,
-      compactEvery = 1)
-      .trigger(Trigger.ProcessingTime(0L)).start()
+      compactEvery = 1, trigger = Trigger.ProcessingTime(0L))
     val seen = scala.collection.mutable.Set.empty[String]
     val expDropped = scala.collection.mutable.Set.empty[Long]
     for ((b, i) <- Seq(b1, b2, b3).zipWithIndex) {
@@ -924,9 +922,9 @@ class StreamingSpec extends SparkSpec {
       .selectExpr("cast(cell_id as long)", "id").as[(Long, Long)]
       .collect().sortBy(_._2).toSeq
     assert(after == before, "re-shard boundary retry changed assignments")
-    // writer refuses the ambiguous double-boundary configuration
+    // the ingest refuses the ambiguous double-boundary configuration
     val ex = intercept[IllegalArgumentException] {
-      Ingest.ivfIndexIngestWriter(
+      Ingest.startIvfIndexIngest(
         spark.readStream.schema(all.schema).parquet(tmpDir("ivf-none")),
         tmpDir("ivf-conf"), tmpDir("ivf-ckpt"),
         refreshEvery = 2, reshardEvery = 2)
@@ -1208,6 +1206,116 @@ class StreamingSpec extends SparkSpec {
       s"band match through the compacted generation lost: $flags")
   }
 
+  test("compactEvery through a running stream: decontaminating, near-dup, " +
+      "HLL, IVF, IVF-PQ and embed-dedup ingests compact at batch 2 and " +
+      "publish the same feed as an uncompacted run") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.{DataFrame, Encoder}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    type Start = (DataFrame, String, String, Int, Trigger) => StreamingQuery
+    // three micro-batches (ids 0, 1, 2): compactEvery = 2 folds batches
+    // 0 and 1 into compact_upto_2 before batch 2, whose verdicts then
+    // read that history through the floor
+    def run[T: Encoder](batches: Seq[Seq[T]], cols: Seq[String],
+                        start: Start)(compactEvery: Int): String = {
+      val stateDir = tmpDir("wired-compact")
+      val mem = MemoryStream[T]
+      val q = start(mem.toDF().toDF(cols: _*), stateDir,
+        tmpDir("wired-compact-ckpt"), compactEvery, Trigger.ProcessingTime(0L))
+      try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      stateDir
+    }
+    def rows(label: String, df: DataFrame): Set[String] =
+      df.collect().map(r => s"$label $r").toSet
+    def perBatch(stateDir: String, sub: String, cols: String*): Set[String] =
+      rows(sub, spark.read.parquet(s"$stateDir/$sub/batch_*").selectExpr(cols: _*))
+    def sameFeed(feed: String => Set[String])(got: String, want: String): Unit = {
+      val (g, w) = (feed(got), feed(want))
+      assert(w.nonEmpty && g == w, s"compacted $g != uncompacted $w")
+    }
+
+    def words(p: String, r: Range) = r.map(j => s"$p$j")
+    val base = words("w", 0 until 30)
+    // batch 1 near-copies batch 0's doc 1; batch 2 shares a 5-gram run
+    // with doc 1 (id 5) and repeats doc 2 verbatim (id 6)
+    val docs: Seq[Seq[(Long, String)]] = Seq(
+      Seq((1L, base), (2L, words("x", 40 until 70))),
+      Seq((3L, base.updated(15, "EDIT")), (4L, words("y", 80 until 110))),
+      Seq((5L, Seq("z1") ++ base.take(5) ++ Seq("z2")),
+        (6L, words("x", 40 until 70)), (7L, words("v", 120 until 150))))
+      .map(_.map { case (id, ws) => (id, ws.mkString(" ")) })
+    val sourced = docs.map(_.map { case (id, t) =>
+      (id, if (id % 2 == 1) "a" else "b", t) })
+    // three direction clusters in 8 dims; batch 2 adds exact twins
+    // (id + 100) of ten batch-0 vectors
+    def vec(id: Long): Seq[Float] = {
+      val c = (id % 3).toInt
+      (0 until 8).map(j =>
+        (if (j % 3 == c) 1f else 0f) + ((id * 7 + j * 3) % 11) * 0.01f)
+    }
+    val vecs: Seq[Seq[(Long, Seq[Float])]] = Seq(
+      (0L until 30L).map(i => (i, vec(i))),
+      (30L until 60L).map(i => (i, vec(i))),
+      (60L until 80L).map(i => (i, vec(i))) ++
+        (0L until 10L).map(i => (100L + i, vec(i))))
+    val docCols = Seq("doc_id", "text")
+    val vecCols = Seq("vec_id", "embedding")
+
+    case class Wiring(name: String, sub: String, run: Int => String,
+                      same: (String, String) => Unit)
+    val wirings = Seq(
+      Wiring("decontaminating", "grams",
+        run(docs, docCols, (s, st, ck, ce, t) => Ingest
+          .startDecontaminatingIngest(s, st, ck, trigger = t, compactEvery = ce)),
+        sameFeed(d => perBatch(d, "docs", "doc_id") ++
+          perBatch(d, "quarantine", "doc_id", "n_contaminated"))),
+      Wiring("near-dup", "bands",
+        run(docs, docCols, (s, st, ck, ce, t) => Ingest
+          .startNearDupIngest(s, st, ck, compactEvery = ce, trigger = t)),
+        sameFeed(d => rows("flags", Ingest.nearDupFlags(spark, d)) ++
+          perBatch(d, "docs", "doc_id"))),
+      Wiring("HLL", "sketches",
+        run(sourced, Seq("doc_id", "source", "text"), (s, st, ck, ce, t) =>
+          Ingest.startHllDistinctIngest(s, st, ck, trigger = t, compactEvery = ce)),
+        { (got, want) =>
+          // union regrouping keeps the accuracy class, not bit-identity:
+          // the band of the HLL compaction spec above
+          def counts(d: String) = spark.read.parquet(s"$d/counts/batch_2")
+            .select("key", "distinct_tokens").as[(String, Long)].collect().toMap
+          val (g, w) = (counts(got), counts(want))
+          assert(w.nonEmpty && g.keySet == w.keySet && g.forall { case (k, v) =>
+            math.abs(v - w(k)) <= math.max(1L, (0.02 * w(k)).toLong) },
+            s"compacted $g vs uncompacted $w")
+        }),
+      Wiring("IVF", "cells",
+        run(vecs, vecCols, (s, st, ck, ce, t) => Ingest.startIvfIndexIngest(
+          s, st, ck, nCells = 3, iters = 4, trigger = t, compactEvery = ce)),
+        sameFeed(d => rows("cells",
+          Ingest.ivfCellState(spark, d).select("cell_id", "id")))),
+      Wiring("IVF-PQ", "codes",
+        run(vecs, vecCols, (s, st, ck, ce, t) => Ingest.startIvfPqIndexIngest(
+          s, st, ck, nCells = 3, iters = 4, m = 4, ks = 16,
+          compactEvery = ce, trigger = t)),
+        sameFeed(d => rows("codes", Ingest.ivfPqCodeState(spark, d)
+          .selectExpr("cell_id", "id", "hex(code)")))),
+      Wiring("embed-dedup", "cells",
+        run(vecs, vecCols, (s, st, ck, ce, t) => Ingest.startEmbedDedupIngest(
+          s, st, ck, nCells = 3, iters = 4, threshold = 0.999,
+          compactEvery = ce, trigger = t)),
+        sameFeed(d => perBatch(d, "flags", "id", "n_dups", "max_cos"))))
+
+    for (w <- wirings) withClue(s"${w.name}: ") {
+      val compacted = w.run(2)
+      val plain = w.run(0)
+      def generation(d: String) =
+        new java.io.File(s"$d/${w.sub}/compact_upto_2/_SUCCESS").exists()
+      assert(generation(compacted), "compactEvery = 2 left no compact_upto_2")
+      assert(!generation(plain), "compactEvery = 0 compacted")
+      w.same(compacted, plain)
+    }
+  }
+
   test("stream-static enrichment join == batch join, static side broadcast") {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq(("BTC", "Bitcoin"), ("ETH", "Ether")).toDF("code", "name")
@@ -1242,8 +1350,8 @@ class StreamingSpec extends SparkSpec {
 
     val streamed = CandleStore(spark, tmpDir("st-stream") + "/t")
     val stream = MemoryStream[Candle]
-    val query = Ingest.upsertWriter(stream.toDF(), streamed, tmpDir("st-ckpt"))
-      .trigger(Trigger.ProcessingTime(0)).start()
+    val query = Ingest.startUpsertIngest(stream.toDF(), streamed, tmpDir("st-ckpt"),
+      trigger = Trigger.ProcessingTime(0))
     Seq(b1, b2, b3).foreach { b => stream.addData(b); query.processAllAvailable() }
     query.stop()
 
@@ -1270,8 +1378,8 @@ class StreamingSpec extends SparkSpec {
 
     val vst = graft.store.VersionedCandleStore(spark, tmpDir("st-vstream") + "/v")
     val stream = MemoryStream[Candle]
-    val query = Ingest.versionedCommitWriter(stream.toDF(), vst, tmpDir("st-vckpt"))
-      .trigger(Trigger.ProcessingTime(0)).start()
+    val query = Ingest.startVersionedIngest(stream.toDF(), vst, tmpDir("st-vckpt"),
+      trigger = Trigger.ProcessingTime(0))
     Seq(b1, b2, b3).foreach { b => stream.addData(b); query.processAllAvailable() }
     query.stop()
 
@@ -1813,9 +1921,8 @@ class StreamingSpec extends SparkSpec {
     val before = counter.value
     val stream = MemoryStream[Candle]
     // horizon 1h: the 09:00 row is 2h behind the batch max (11:00)
-    val query = Ingest.upsertWriter(stream.toDF(), store, tmpDir("st-late-ckpt"),
-        lateHorizonSec = Some(3600L))
-      .trigger(Trigger.ProcessingTime(0)).start()
+    val query = Ingest.startUpsertIngest(stream.toDF(), store, tmpDir("st-late-ckpt"),
+      trigger = Trigger.ProcessingTime(0), lateHorizonSec = Some(3600L))
     stream.addData(Seq(
       c("BTC", "2022-01-01 11:00:00", 1),
       c("BTC", "2022-01-01 10:30:00", 2),  // within horizon: not late
@@ -1860,8 +1967,8 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val stream = spark.readStream
         .schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
-      val q = Ingest.upsertWriter(stream, store, ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+      val q = Ingest.startUpsertIngest(stream, store, ckpt,
+        trigger = Trigger.AvailableNow())
       q.awaitTermination()
     }
     runOnce()
