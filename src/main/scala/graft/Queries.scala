@@ -1558,41 +1558,36 @@ object Queries {
     * of file order.
     */
   /** Split the events table into three second-aligned time slices as
-    * single files b0/b1/b2 under `base/src` ([[stageSliceFiles]]).
-    * Returns (srcDir, raw schema): slice i covers `[cut_i, cut_i+1)`
+    * single files b0/b1/b2 under `base/src` ([[stageSliceFiles]]), in
+    * the schema of [[Tables.events]]. Slice i covers `[cut_i, cut_i+1)`
     * with cut1/cut2 at 1/3 and 2/3 of the ns time range, floored to
     * whole seconds (so no 1s candle bucket spans two slices).
     */
-  private val sliceCache =
-    fixtureCache[(String, org.apache.spark.sql.types.StructType)]()
+  private val sliceCache = fixtureCache[String]()
 
   /** Slices depend only on the dataset — share one srcDir between the
     * plain and versioned streaming fixtures instead of re-reading and
     * re-staging the events table per store.
     */
-  private def sliceEventFiles(s: SparkSession, d: String, base: String):
-      (String, org.apache.spark.sql.types.StructType) =
+  private def sliceEventFiles(s: SparkSession, d: String, base: String): String =
     sliceCache.getOrElseUpdate(ek(d), buildSliceFiles(s, d, base))
 
-  private def buildSliceFiles(s: SparkSession, d: String, base: String):
-      (String, org.apache.spark.sql.types.StructType) = {
+  private def buildSliceFiles(s: SparkSession, d: String, base: String): String = {
     // events.ts encoding varies across driver regenerations (raw
     // nanos / NTZ µs — see Tables.normalizeEventTs); canonicalize
     // FIRST, then slice on epoch micros, so the written slices always
     // carry µs UTC timestamps and the stream needs no conversion.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.normalizeEventTs(s.read.parquet(s"$d/events.parquet"))
+    val raw = Tables.events(s, d)
     val tsUs = unix_micros(col("ts"))
     val mm = raw.agg(min(tsUs), max(tsUs)).head()
     val (mn, mx) = (mm.getLong(0), mm.getLong(1))
     def secondAligned(us: Long): Long = us / 1000000L * 1000000L
     val cut1 = secondAligned(mn + (mx - mn) / 3)
     val cut2 = secondAligned(mn + 2 * (mx - mn) / 3)
-    val srcDir = stageSliceFiles(s, base,
+    stageSliceFiles(s, base,
         raw.withColumn("_slice",
         when(tsUs < cut1, 0).when(tsUs < cut2, 1).otherwise(2)),
       nSlices = 3)
-    (srcDir, raw.schema)
   }
 
   /** The per-micro-batch tick→1s-candle transform shared by the plain
@@ -1610,10 +1605,9 @@ object Queries {
     val path = streamCache.getOrElseUpdate(ek(d), {
       val base = fixtureTmpDir("graft-qstream").toString
       val p = s"$base/candles"
-      val (srcDir, schema) = sliceEventFiles(s, d, base)
-      val stream = s.readStream.schema(schema)
+      val stream = s.readStream.schema(Tables.events(s, d).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir) // slices already carry canonical µs UTC ts
+        .parquet(sliceEventFiles(s, d, base)) // canonical µs UTC ts
       val st = CandleStore(s, p)
       val q = graft.streaming.Ingest.startUpsertIngest(stream, st, s"$base/ckpt",
         transform = eventCandleTransform)
@@ -1638,10 +1632,9 @@ object Queries {
     val path = vstreamCache.getOrElseUpdate(ek(d), {
       val base = fixtureTmpDir("graft-qvstream").toString
       val p = s"$base/v"
-      val (srcDir, schema) = sliceEventFiles(s, d, base)
-      val stream = s.readStream.schema(schema)
+      val stream = s.readStream.schema(Tables.events(s, d).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir) // slices already carry canonical µs UTC ts
+        .parquet(sliceEventFiles(s, d, base)) // canonical µs UTC ts
       val vst = graft.store.VersionedCandleStore(s, p)
       val q = graft.streaming.Ingest.startVersionedIngest(stream, vst, s"$base/ckpt",
         transform = eventCandleTransform)

@@ -22,7 +22,7 @@ object Tables {
     * (value-preserving under the session's UTC zone); TimestampType
     * passes through.
     */
-  private[graft] def normalizeEventTs(df: DataFrame): DataFrame =
+  private def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -32,29 +32,15 @@ object Tables {
       case _ => df
     }
 
-  /** Schema cache, keyed by file path: the testdata tables are
-    * immutable, but every bare `spark.read.parquet` re-infers the
-    * schema — a driver-side footer-sampling JOB per call (guide §7.3:
-    * `mergeSchemasInParallel` frames on the driver between stages).
-    * Across the 176-query bench the tables are loaded hundreds of
-    * times; caching the inferred StructType and passing it explicitly
-    * removes every one of those jobs after the first. At 100 TB the
-    * same change is what `spark.read.schema(...)` exists for — schema-
-    * on-read inference samples footers across thousands of files.
+  /** One immutable testdata table, pinned by path through
+    * [[graft.store.PinnedRead]]: only its first load pays the footer-
+    * inference job. `nanosAsLong` is set first, so a TIMESTAMP(NANOS)
+    * `events.ts` pins as raw nanos for [[normalizeEventTs]].
     */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = schemaCache.get(path) match {
-      case Some(sc) => spark.read.schema(sc).parquet(path)
-      case None =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val first = spark.read.parquet(path)
-        schemaCache.putIfAbsent(path, first.schema)
-        first
-    }
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = graft.store.PinnedRead.read(spark, path, Seq(path))
     if (name == "events") normalizeEventTs(df) else df
   }
 

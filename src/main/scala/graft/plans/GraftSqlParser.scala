@@ -4,7 +4,7 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.parser.ParserInterface
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -36,11 +36,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
+    rewritten(sqlText).getOrElse(delegate.parsePlan(sqlText))
+
+  // `spark.sql(text, args)` parses here; the inherited default drops `args`
+  override def parsePlanWithParameters(sqlText: String, args: ParameterContext): LogicalPlan =
+    rewritten(sqlText).getOrElse(delegate.parsePlanWithParameters(sqlText, args))
+
+  private def rewritten(sqlText: String): Option[LogicalPlan] =
     GraftSqlParser.rewriteCreateMaterializedView(sqlText, delegate)
-      .orElse(GraftSqlParser.rewriteDropMaterializedView(sqlText, delegate)) match {
-      case Some(call) => delegate.parsePlan(call)
-      case None => delegate.parsePlan(sqlText)
-    }
+      .orElse(GraftSqlParser.rewriteDropMaterializedView(sqlText, delegate))
+      .map(delegate.parsePlan)
 
   override def parseExpression(sqlText: String) =
     delegate.parseExpression(sqlText)

@@ -94,17 +94,16 @@ final class CandleStore(spark: SparkSession, val path: String) {
     * zero included, where inference would read it as an integer): a
     * bare `read.parquet` launches a footer-inference job per scan
     * (guide §7.3), multiplied across every store-backed query and
-    * fixture. [[CandleStore.assertPinnedSchema]] checks the data
-    * fields and partition names on the first scan of each store.
+    * fixture. [[PinnedRead]] checks the data fields and partition
+    * names against the pin on the first scan of each store.
     * A store with no data dirs falls back to the bare read so the
     * "unable to infer schema" failure of scanning a never-committed
     * store stays exactly as loud as before.
     */
   private[graft] def scanNoRecover(): DataFrame =
-    if (exists) {
-      CandleStore.assertPinnedSchema(spark, path)
-      spark.read.schema(CandleStore.pinnedScanSchema).parquet(path)
-    } else spark.read.parquet(path)
+    if (exists)
+      PinnedRead.read(spark, path, Seq(path), Some(CandleStore.pinnedScanSchema))
+    else spark.read.parquet(path)
 
   /** Point lookup of one series-year "page" — pure partition pruning
     * (reference: `Storage.checkAndLoad`, `storage.go:78-96`).
@@ -670,10 +669,10 @@ final class CandleStore(spark: SparkSession, val path: String) {
   /** Read ONLY the given touched partitions' directories, listing
     * O(touched) files instead of the whole table — `None` when the
     * touched set exceeds the collect cap or carries a null partition
-    * value (caller falls back to the full-scan semi-join). The schema
-    * is pinned (data columns as written, partition columns as the
-    * table declares them), so path-value type inference can never
-    * diverge from the batch side of the union. Runs [[recover]] first,
+    * value (caller falls back to the full-scan semi-join). It reads
+    * with the scan's [[CandleStore.pinnedScanSchema]], so path-value
+    * type inference can never diverge from the batch side of the
+    * (by-name) union. Runs [[recover]] first,
     * like [[scan]] — a crash-torn predecessor must be completed before
     * its partitions are read.
     */
@@ -697,15 +696,12 @@ final class CandleStore(spark: SparkSession, val path: String) {
     // metadata RPCs, the same wall the stageIntent census avoids
     val dirs = inParallel(candidates)(d => d -> fs.exists(d))
       .collect { case (d, true) => d } // insert-only partitions: no dir yet
-    val schema = org.apache.spark.sql.types.StructType(
-      Candle.schema.fields.toSeq :+ org.apache.spark.sql.types.StructField(
-        "year", org.apache.spark.sql.types.IntegerType))
     if (dirs.isEmpty)
       return Some(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+        new java.util.ArrayList[org.apache.spark.sql.Row](), pinnedScanSchema))
     Some(spark.read
       .option("basePath", path)
-      .schema(schema)
+      .schema(pinnedScanSchema)
       .parquet(dirs.map(_.toString).toIndexedSeq: _*))
   }
 
@@ -722,7 +718,7 @@ final class CandleStore(spark: SparkSession, val path: String) {
     val contentStruct = struct(col("open"), col("high"), col("low"),
       col("close"), col("volume"), col("bit_fields"))
     val batchOrd = ordinalCol.map(c => col(c).cast("long")).getOrElse(lit(0L))
-    val normalized = batch
+    val normalized = withPathSafeKeys(batch)
       .withColumn("ts", date_trunc("second", col("ts")).cast("timestamp"))
       .withColumn("year", year(col("ts")))
       .withColumn("_ord", batchOrd)
@@ -859,7 +855,7 @@ final class CandleStore(spark: SparkSession, val path: String) {
       col("close"), col("volume"), col("bit_fields"))
     val ord = ordinalCol.map(c => col(c).cast("long")).getOrElse(lit(0L))
     withMicrosTimestamps(batch) {
-      batch
+      withPathSafeKeys(batch)
         .withColumn("ts", date_trunc("second", col("ts")).cast("timestamp"))
         .withColumn("year", year(col("ts")))
         .withColumn("_cstruct", contentStruct)
@@ -886,58 +882,42 @@ object CandleStore {
     * [[graft.model.Candle.partitionCols]] directory order. The pin SETS
     * the partition types (`code` and `market` are strings whatever
     * their values look like), so it differs from inference on a store
-    * whose codes are all digits. Pinned so [[CandleStore.scanNoRecover]]
-    * skips per-scan footer inference.
+    * whose codes are all digits. Pinned through [[PinnedRead]] so
+    * [[CandleStore.scanNoRecover]] skips per-scan footer inference.
     */
   private[store] val pinnedScanSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    val partTypes = Map[String, DataType]("market" -> StringType,
-      "candle_length" -> IntegerType, "code" -> StringType,
-      "year" -> IntegerType)
     // nullable = true throughout, matching what inference returns —
     // callers comparing scan().schema must see the identical shape
-    StructType(
-      graft.model.Candle.schema.fields.toSeq
-        .filterNot(f => graft.model.Candle.partitionCols.contains(f.name))
-        .map(_.copy(nullable = true)) ++
-        graft.model.Candle.partitionCols.map(n =>
-          StructField(n, partTypes(n))))
+    val byName = (Candle.schema.fields :+ StructField("year", IntegerType))
+      .map(f => f.name -> f.copy(nullable = true)).toMap
+    StructType((Candle.schema.fieldNames.filterNot(Candle.partitionCols.contains) ++
+      Candle.partitionCols).map(byName))
   }
 
-  /** One-time (per store path per JVM) footer-vs-pin assertion: a
-    * future layout revision that adds a column would otherwise be
-    * silently PROJECTED AWAY by the pinned read instead of failing
-    * loudly. Compares the data fields by name and type and the
-    * partition column names in directory order; partition TYPES are
-    * not compared, because the pin sets them (inference types
-    * `code=005930` as an integer, the pinned read keeps it a string).
-    * Costs one inference on the FIRST scan of each store;
-    * every later scan stays inference-free (the point of the pin).
-    * Transient inference failures (a store mid-commit) un-mark the
-    * path so the next scan re-checks instead of never checking.
+  /** `batch` refusing, by a `raise_error` in its own projection (so no
+    * extra Spark job), a market or code its partition dir would lose: a
+    * null or empty key reads back as null (`__HIVE_DEFAULT_PARTITION__`),
+    * and one the path charset (`sun.jnu.encoding`, ASCII when `LANG` is
+    * unset) cannot encode fails the write with an opaque
+    * `InvalidPathException`.
     */
-  private val pinCheckedPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Column names in order, with the type of each data column; a
-    * partition column's type is left out (None). */
-  private def pinShape(s: org.apache.spark.sql.types.StructType)
-      : Seq[(String, Option[org.apache.spark.sql.types.DataType])] =
-    s.fields.toSeq.map(f =>
-      f.name -> Option.unless(graft.model.Candle.partitionCols.contains(f.name))(f.dataType))
-
-  private[store] def assertPinnedSchema(spark: SparkSession, path: String): Unit = {
-    if (!pinCheckedPaths.add(path)) return
-    val inferred =
-      try spark.read.parquet(path).schema
-      catch { case _: Throwable => pinCheckedPaths.remove(path); return }
-    if (pinShape(inferred) != pinShape(pinnedScanSchema)) {
-      pinCheckedPaths.remove(path)
-      sys.error(
-        s"candle store $path: on-disk schema does not match the pinned " +
-          s"scan schema — the layout changed without revising the pin.\n" +
-          s"  inferred: $inferred\n  pinned:   $pinnedScanSchema")
+  private def withPathSafeKeys(batch: DataFrame): DataFrame =
+    Seq("market", "code").foldLeft(batch) { (df, k) =>
+      val fault = keyFault(lit(k), col(k))
+      df.withColumn(k, when(fault.isNull, col(k)).otherwise(raise_error(fault)))
     }
+
+  private lazy val pathCharset =
+    java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+
+  private val keyFault = udf { (name: String, key: String) =>
+    val why =
+      if (key == null || key.isEmpty) Some("it would read back as null")
+      else Option.unless(key.forall(_ < 0x80) || pathCharset.newEncoder().canEncode(key))(
+        "the charset cannot encode it")
+    why.map(w => s"candle $name ${Option(key).fold("null")(k => s"'$k'")} cannot name " +
+      s"a partition directory in path charset ${pathCharset.name}: $w").orNull
   }
 
   /** [[CandleStore.detail]]'s row — what

@@ -178,25 +178,17 @@ final class IncrementalView(
     adoptedGenFull().map(g => (g._1, g._3))
 
   /** A view's generation schema is constant for the instance lifetime
-    * (the definition is immutable per view dir; replace = drop +
-    * re-create = a new dir and instance), so the first generation read
-    * infers it once and every later read passes it explicitly — a bare
-    * `read.parquet` pays a footer-inference job per call (guide §7.3),
-    * and the refresh/feed/read paths each touch generations several
-    * times per operation.
+    * (its definition is immutable), and the refresh/feed/read paths each
+    * touch generations several times per operation, so generation reads
+    * are pinned, keyed by the view dir. The pins are the instance's own:
+    * REPLACE (and DROP + CREATE) reuses the same dir under a new
+    * definition, so a JVM-wide pin on the dir could outlive its layout.
     */
-  @volatile private var genSchemaCache: Option[StructType] = None
-  private def readGenDir(dir: Path): DataFrame = genSchemaCache match {
-    case Some(sc) => spark.read.schema(sc).parquet(dir.toString)
-    case None =>
-      val df = spark.read.parquet(dir.toString)
-      genSchemaCache = Some(df.schema)
-      df
-  }
+  private val genPins = new PinnedRead
 
   /** The view's current contents. Refuses before the first refresh. */
   def read(): DataFrame = adoptedGen() match {
-    case Some((_, dir)) => readGenDir(dir)
+    case Some((_, dir)) => genPins.read(spark, path, Seq(dir.toString))
     case None => fail("no refreshed generation yet — call refresh() first" +
       " (SQL: CALL <catalog>.system.refresh_view)")
   }
@@ -210,7 +202,7 @@ final class IncrementalView(
     * Spark's own analysis errors (creation runs this eagerly).
     */
   private[graft] def tableSchema: StructType = adoptedGen() match {
-    case Some((_, dir)) => readGenDir(dir).schema
+    case Some((_, dir)) => genPins.read(spark, path, Seq(dir.toString)).schema
     case None => definitionSchema
   }
 
@@ -291,11 +283,11 @@ final class IncrementalView(
           s"${IncrementalView.NotRetainedMarker} " +
           "(one-hop GC keeps only the immediately superseded state) — " +
           "re-read the full view and restart the tail from generation()"))
-    val next = readGenDir(dirOf(untilTx, untilRev))
+    val next = genPins.read(spark, path, Seq(dirOf(untilTx, untilRev).toString))
     if ((untilTx, untilRev) == ((sinceTx, sinceRev)))
       return next.where(org.apache.spark.sql.functions.lit(false))
         .withColumn(kind, org.apache.spark.sql.functions.lit(""))
-    val old = readGenDir(dirOf(sinceTx, sinceRev))
+    val old = genPins.read(spark, path, Seq(dirOf(sinceTx, sinceRev).toString))
     // NULL-SAFE delete detection (nullSafeGroupCond — the refresh's
     // joins share the same definition); except() on the upsert side is
     // set-semantics null-safe already
@@ -315,7 +307,7 @@ final class IncrementalView(
     */
   private[graft] def readGeneration(tx: Long, rev: Long): DataFrame =
     listGens().filter(_._4).find(g => g._1 == tx && g._2 == rev)
-      .map(g => readGenDir(g._3))
+      .map(g => genPins.read(spark, path, Seq(g._3.toString)))
       .getOrElse(fail(s"generation (tx=$tx, rev=$rev) is " +
         s"${IncrementalView.NotRetainedMarker} " +
         "(one-hop GC keeps only the immediately superseded state) — " +
@@ -499,7 +491,7 @@ final class IncrementalView(
             // the write lands in a FRESH generation dir (a same-watermark
             // repair bumps the repair rev) and GC retains the dir this
             // plan reads — no pinning needed
-            val old = readGenDir(dir)
+            val old = genPins.read(spark, path, Seq(dir.toString))
             writeGen(newHead, old
               .join(t, nullSafeGroupCond(old, "t"), "left_anti")
               .unionByName(recomputed), floor, recents)

@@ -1903,7 +1903,7 @@ final class VersionedCandleStore(spark: SparkSession, val path: String,
           .write.partitionBy(Candle.partitionCols: _*)
           .mode(SaveMode.Overwrite).parquet(newGen.toString)
       }
-      val nRows = spark.read.parquet(newGen.toString).count()
+      val nRows = spark.read.schema(dataSchema).parquet(newGen.toString).count()
       crash(2)
       // Journal the squash floor BEFORE publishing the generation: see
       // the crash-safety note in the scaladoc — floor-then-publish makes

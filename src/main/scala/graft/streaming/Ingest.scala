@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.store.CandleStore
+import graft.store.{CandleStore, PinnedRead}
 
 /** Structured-Streaming ingest: the Spark-native replacement for the
   * reference's WAL pipeline (SURVEY.md §2.3).
@@ -51,41 +51,25 @@ object Ingest {
   private def onCadence(every: Int, batchId: Long): Boolean =
     every > 0 && batchId > 0 && batchId % every == 0
 
-  /** Footer-inference-once reads of substream state (guide §6, §7.3):
-    * every generation dir of one substream (`.../<kind>/batch_*`,
-    * `.../<kind>/compact_upto_*`) carries the same schema BY
-    * CONSTRUCTION — the same writer publishes each generation — yet a
-    * bare `spark.read.parquet` pays a footer-inference JOB per CALL,
-    * and the multi-batch ingests re-read their substreams every
-    * micro-batch. Infer once per substream dir (the generations'
-    * parent), cache the StructType, read pinned. Metadata only — the
-    * cache holds schemas, never rows — and a fresh fixture world gets
-    * fresh dirs, so a key can never alias two different states.
+  /** Pinned reads of substream state ([[graft.store.PinnedRead]]): the
+    * multi-batch ingests re-read their substreams every micro-batch, and
+    * every generation of one substream carries the same schema BY
+    * CONSTRUCTION (one writer publishes each), so generation dirs and
+    * globs (`.../<kind>/batch_*`, `.../<kind>/compact_upto_*`) pin on
+    * their substream (parent) dir; any other path pins on itself — two
+    * children of one parent must never alias each other's schema. A
+    * fresh fixture world gets fresh dirs, so a key never names two states.
     */
-  private val substreamSchemas =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+  private[graft] def pinnedRead(spark: org.apache.spark.sql.SparkSession,
+                                paths: Seq[String]): DataFrame =
+    PinnedRead.read(spark, pinKey(paths.head), paths)
 
-  /** Cache key: generation dirs/globs (`batch_*`, `compact_upto_*`)
-    * key on their substream (parent) dir so every generation shares
-    * one inference; any other path keys on itself — two distinct
-    * children of one parent must never alias each other's schema.
-    */
-  private def substreamKey(p: String): String = {
+  private def pinKey(p: String): String = {
     val path = new org.apache.hadoop.fs.Path(p)
     val n = path.getName
     if (n.startsWith("batch_") || n.startsWith("compact_upto_"))
       path.getParent.toString
     else p
-  }
-
-  private[graft] def pinnedRead(spark: org.apache.spark.sql.SparkSession,
-                                paths: Seq[String]): DataFrame = {
-    // fall back to the all-paths inference when the head generation has
-    // no readable footer (a legitimately EMPTY state dir)
-    val sc = substreamSchemas.getOrElseUpdate(substreamKey(paths.head),
-      try spark.read.parquet(paths.head).schema
-      catch { case _: Throwable => spark.read.parquet(paths: _*).schema })
-    spark.read.schema(sc).parquet(paths: _*)
   }
 
   /** Streaming dedup on the candle key with bounded state. */
@@ -1310,7 +1294,7 @@ object Ingest {
     * `onlyCells` when given — the filter lands on the PARTITION column,
     * so Spark's partition pruning skips non-probed `cell_id=N/`
     * directories at file-listing time. The data schema is supplied
-    * (caller-provided, or inferred ONCE from the first dir), never
+    * (caller-provided, or pinned once per substream), never
     * re-inferred per dir: per-dir footer inference multiplied a fixed
     * cost across every accumulated generation — the r10 ANN-family
     * regression.
@@ -1324,11 +1308,7 @@ object Ingest {
     // at scan time (partitioned dirs) or match the written type (legacy
     // flat dirs whose cell_id is a long data column), so the union
     // needs no per-branch cast and prune literals compare exactly.
-    // infer-once per substream (the generations' parent dir) when no
-    // caller schema: the same writer produced every generation
-    val base = schema.getOrElse(
-      substreamSchemas.getOrElseUpdate(substreamKey(dirs.head),
-        spark.read.parquet(dirs.head).schema))
+    val base = schema.getOrElse(PinnedRead.schema(spark, pinKey(dirs.head), dirs))
     val fixed = org.apache.spark.sql.types.StructType(base.fields.map(f =>
       if (f.name == "cell_id") f.copy(dataType = LongType) else f))
     // one read PER state dir, unioned: sibling partitioned dirs can't

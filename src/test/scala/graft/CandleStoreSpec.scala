@@ -358,6 +358,38 @@ class CandleStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("pinned"), s"unexpected: ${e.getMessage}")
   }
 
+  test("upsert refuses a key its partition dir would lose: empty, or outside " +
+      "the path charset") {
+    val store = CandleStore(spark, tmpDir("cs-keys") + "/t")
+    store.upsert(Seq(c("BTC", "2022-03-01 10:00:00", 1)).toDF())
+    val before = store.scan().collect().toSeq
+    val cs = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    // the refusal travels as a task failure: search the whole cause chain
+    def refusal(f: => Any): String =
+      Iterator.iterate[Throwable](intercept[Exception](f))(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+    val empty = refusal(store.upsert(Seq(c("", "2022-03-01 11:00:00", 2)).toDF()))
+    assert(empty.contains("candle code ''") && empty.contains(cs.name), empty)
+    assert(store.scan().collect().toSeq == before)
+    val noMarket = refusal(store.appendNewer(
+      Seq(c("BTC", "2022-03-01 12:00:00", 3).copy(market = null)).toDF()))
+    assert(noMarket.contains("candle market null"), noMarket)
+    assert(store.scan().collect().toSeq == before)
+
+    val code = "\uC0BC\uC131" // Samsung, 6 bytes in UTF-8
+    val nonAscii = Seq(c(code, "2022-03-01 13:00:00", 4)).toDF()
+    if (cs.newEncoder().canEncode(code)) {
+      store.upsert(nonAscii)
+      assert(store.readPage("UPBIT", code, 60, 2022).select("code", "open")
+        .as[(String, Double)].collect().toSeq == Seq((code, 4.0)))
+    } else {
+      val msg = refusal(store.upsert(nonAscii))
+      assert(msg.contains(s"candle code '$code'") && msg.contains(cs.name), msg)
+      assert(store.scan().collect().toSeq == before)
+    }
+  }
+
   test("all-digit KRX codes keep their leading zeros through every read path " +
       "(ref page/index.go:19-28 keys codes as strings)") {
     val base = tmpDir("cs-krx")

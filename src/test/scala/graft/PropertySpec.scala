@@ -16,25 +16,104 @@ import graft.store.CandleStore
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
-  private val candleGen: Gen[Candle] = for {
-    code <- Gen.oneOf("BTC", "ETH")
+  /** Candles of the (market, code) keys `keys` draws. */
+  private def candlesOf(keys: Gen[(String, String)]): Gen[Candle] = for {
+    key <- keys
     // seconds across the 2021/2022 boundary -> exercises year split
     off <- Gen.choose(-2000000L, 2000000L)
     o <- Gen.choose(1.0, 100.0)
     v <- Gen.choose(0.0, 10.0)
-  } yield Candle("UPBIT", code, 60,
+  } yield Candle(key._1, key._2, 60,
     new Timestamp(Timestamp.valueOf("2022-01-01 00:00:00").getTime + off * 1000L),
     o, o + 1, o - 1, o + 0.5, v, 0L)
 
+  /** The fixed keys of the single-market properties below, which key
+    * their oracles on `code` alone. */
+  private val candleGen: Gen[Candle] =
+    candlesOf(Gen.oneOf("BTC", "ETH").map(("UPBIT", _)))
+
+  /** Store keys under mora's limits (PAPER.md: MarketCode ≤ 10 bytes,
+    * Code ≤ 18 bytes): all-digit codes with leading zeros, keys at the
+    * maximum length, characters Hive escapes in partition dirs, leading
+    * and trailing spaces, the literal `null`, and non-ASCII (Hangul, 3
+    * bytes each in UTF-8). Never empty: upsert refuses empty keys.
+    */
+  private def keyOf(maxBytes: Int): Gen[String] = {
+    val alnum = Gen.alphaNumChar
+    val escaped = Gen.oneOf(" /:=%#?*\\{}[]\"".toSeq)
+    def upTo(n: Int, c: Gen[Char]): Gen[String] =
+      Gen.choose(1, n).flatMap(Gen.listOfN(_, c)).map(_.mkString)
+    Gen.oneOf(
+      upTo(maxBytes - 1, Gen.numChar).map("0" + _),
+      Gen.listOfN(maxBytes, alnum).map(_.mkString),
+      upTo(maxBytes, Gen.frequency(2 -> alnum, 1 -> escaped)),
+      upTo(maxBytes - 2, alnum).map(" " + _ + " "),
+      Gen.const("null"),
+      upTo(maxBytes / 3, Gen.choose('\uAC00', '\uD7A3')))
+  }
+  private val keyGen: Gen[(String, String)] =
+    Gen.zip(keyOf(10), keyOf(18))
+
+  private def draw[T](g: Gen[T], seed: Int): T =
+    g.apply(Gen.Parameters.default, rng.Seed(seed.toLong)).get
+
   private def batches(n: Int, size: Int): Seq[Seq[Candle]] =
-    (1 to n).map { s =>
-      Gen.listOfN(size, candleGen)
-        .apply(Gen.Parameters.default, rng.Seed(s.toLong)).get
-    }
+    (1 to n).map(s => draw(Gen.listOfN(size, candleGen), s))
 
   private def state(st: CandleStore): Seq[Row] =
     st.scan().orderBy("code", "ts").collect().toSeq
   private type Row = org.apache.spark.sql.Row
+
+  test("property: generated store keys round-trip through upsert, scan, " +
+      "readPage, rangeScan, minMaxTs and the catalog, or are refused whole") {
+    val base = tmpDir("prop-keys")
+    spark.conf.set("spark.sql.catalog.prop_keys", classOf[graft.sources.CandleCatalog].getName)
+    spark.conf.set("spark.sql.catalog.prop_keys.base", base)
+    val cs = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    def yearOf(t: Timestamp): Int = t.toInstant.atZone(java.time.ZoneOffset.UTC).getYear
+    type Bar = (String, String, Long, Double)
+    def bars(rows: Array[org.apache.spark.sql.Row]): Seq[Bar] = rows.toSeq.map(r =>
+      (r.getAs[String]("market"), r.getAs[String]("code"),
+        r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("open"))).sorted
+    (1 to 3).foreach { seed =>
+      val keys = draw(Gen.listOfN(4, keyGen), seed).distinct
+      val batch = draw(Gen.listOfN(24, candlesOf(Gen.oneOf(keys))), seed)
+      val (ok, refused) = batch.partition(c =>
+        Seq(c.market, c.code).forall(cs.newEncoder().canEncode(_)))
+      // driver oracle: one bar per (key, ts), the max content wins
+      val want = ok.groupBy(c => (c.market, c.code, c.ts.getTime))
+        .map { case ((m, k, t), vs) => (m, k, t, vs.map(_.open).max) }.toSeq.sorted
+      val st = CandleStore(spark, s"$base/ns/s$seed")
+      st.upsert(ok.toDF())
+      val ctx = s"seed $seed, keys ${keys.map { case (m, k) => s"[$m|$k]" }.mkString(" ")}"
+      assert(bars(st.scan().collect()) == want, ctx)
+      ok.map(c => (c.market, c.code)).distinct.foreach { case (m, k) =>
+        val series = want.filter(b => b._1 == m && b._2 == k)
+        series.groupBy(b => yearOf(new Timestamp(b._3))).foreach { case (y, rows) =>
+          assert(bars(st.readPage(m, k, 60, y).collect()) == rows, s"$ctx page $y")
+          val mm = st.minMaxTs(m, k, 60, y).as[(Timestamp, Timestamp)].head()
+          assert((mm._1.getTime, mm._2.getTime) == ((rows.head._3, rows.last._3)),
+            s"$ctx minMaxTs $y")
+        }
+        val (from, to) = (ts("2021-12-20 00:00:00"), ts("2022-01-10 00:00:00"))
+        assert(bars(st.rangeScan(m, k, 60, from, to).collect()) ==
+          series.filter(b => b._3 >= from.getTime && b._3 < to.getTime), s"$ctx range")
+        val sql = spark.sql(
+          s"SELECT market, code, ts, open FROM prop_keys.ns.s$seed " +
+            "WHERE market = :m AND code = :k", Map("m" -> m, "k" -> k))
+        assert(bars(sql.collect()) == series, s"$ctx sql")
+      }
+      // a batch holding any key the path charset cannot encode is
+      // refused before anything lands
+      if (refused.nonEmpty) {
+        val e = intercept[Exception](st.upsert(batch.toDF()))
+        val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).mkString("\n")
+        assert(msg.contains(cs.name), s"$ctx: $msg")
+        assert(bars(st.scan().collect()) == want, s"$ctx after refusal")
+      }
+    }
+  }
 
   test("property: upsert is idempotent — upsert(upsert(S,B),B) == upsert(S,B)") {
     batches(3, 25).zipWithIndex.foreach { case (b, i) =>
