@@ -77,64 +77,58 @@ object Bench {
       val spread = if (failed) -1.0 else times.max - times.min
       (name, sec, if (failed) -1.0 else times.head, spread)
     }
-    // Two renderings of the same results (contract: ONE JSON line on
-    // stdout with the full per-query map; the driver's tail capture is
-    // finite, so the STDOUT line uses 3-decimal seconds — the most
-    // compact faithful encoding; at 176 queries the names alone weigh
-    // 2,948 bytes, so this is as small as the full map can get — while
-    // the artifact file keeps full precision plus first/spread).
-    def jnum(v: Double, compact: Boolean): String =
-      if (!compact) v.toString
-      else {
-        // 3 decimals, trailing zeros trimmed ("0.180"->"0.18", "7.000"->"7.0")
-        val s = f"$v%.3f"
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t + "0" else t
-      }
-    def jmap(kvs: Seq[(String, Double)], compact: Boolean): String =
-      kvs.map { case (k, v) => s"\"" + k + "\":" + jnum(v, compact) }
-        .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    def line(compact: Boolean): String = {
-      val qs = jmap(results.map(r => (r._1, r._2)), compact)
-      // reps > 1: medians measure STEADY-STATE query cost (one-time
-      // fixture builds — stores, streams, bucketed tables — amortize
-      // into rep 1); "first" preserves the cold numbers a single-shot
-      // run (the driver's) would report, so the two stay comparable.
-      // first/spread ride only the ARTIFACT: on the stdout line they
-      // would triple its length past any plausible capture window.
-      val firstField =
-        if (reps > 1 && !compact)
-          s""","first":${jmap(results.map(r => (r._1, r._3)), compact)}""" +
-            s""","spread":${jmap(results.map(r => (r._1, r._4)), compact)}"""
-        else ""
-      s"""{"metric":"total","value":${jnum(total, compact)},"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps$firstField}"""
+    def short(v: Double): String = {
+      // 3 decimals, trailing zeros trimmed ("0.180"->"0.18", "7.000"->"7.0")
+      val t = f"$v%.3f".reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t + "0" else t
     }
-    // Persist the COMPLETE per-query map on full runs: the driver keeps
-    // only the stdout tail, which truncates the line's head — round-
-    // over-round regression adjudication needs all of the values.
-    // Default path is NON-COLLIDING ("last", not a round number): a
-    // driver-invoked run must never clobber a committed reps=3
-    // artifact (that happened in r18 AND r19). SPARK_GRAFT_BENCH_OUT
-    // overrides the path; committed artifacts are copied there by hand.
+    def jmap(kvs: Seq[(String, Double)]): String =
+      kvs.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // Persist the COMPLETE per-query map, at full precision, on full
+    // runs: the stdout line carries no names. Default path is
+    // NON-COLLIDING ("last", not a round number): a driver-invoked run
+    // must never clobber a committed reps=3 artifact (that happened in
+    // r18 AND r19). SPARK_GRAFT_BENCH_OUT overrides the path; committed
+    // artifacts are copied there by hand.
     // Subset runs (SPARK_GRAFT_ONLY) write the artifact only when the
     // caller names a path: the locked-subset protocol needs the full-
     // precision first/spread series, while ad-hoc name-filtered runs
     // must not touch the default artifact.
-    if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL_last.json")
+    val outPath =
+      if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
+        Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL_last.json"))
+      else None
+    outPath.foreach { path =>
+      // reps > 1: medians measure STEADY-STATE query cost (one-time
+      // fixture builds — stores, streams, bucketed tables — amortize
+      // into rep 1); "first" preserves the cold numbers a single-shot
+      // run (the driver's) would report, so the two stay comparable.
+      val firstField =
+        if (reps > 1)
+          s""","first":${jmap(results.map(r => (r._1, r._3)))}""" +
+            s""","spread":${jmap(results.map(r => (r._1, r._4)))}"""
+        else ""
+      val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+        s""""queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps$firstField}"""
       try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outPath), line(compact = false) + "\n")
-        System.err.println(s"[bench] full per-query artifact -> $outPath")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(path), full + "\n")
+        System.err.println(s"[bench] full per-query artifact -> $path")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
       }
     }
-    // The contract line goes LAST on stdout (after the artifact-path
-    // stderr note) so the driver's tail capture keeps as much of it as
-    // the window allows.
-    println(line(compact = true))
+    // The stdout line must fit the driver's finite tail capture: at 176
+    // queries the names alone weigh 2,948 bytes, so it carries the
+    // total, the query count, the times alone in sorted-name order
+    // (3-decimal seconds, about 1.3 KB in all) and the path of the
+    // artifact that names them. It goes LAST on stdout (after the
+    // artifact-path stderr note) so the tail capture keeps all of it.
+    val values = results.map(r => short(r._2)).mkString("[", ",", "]")
+    val artifact = outPath.fold("null")(p => s"\"$p\"")
+    println(s"""{"metric":"total","value":${short(total)},"unit":"sec",""" +
+      s""""n_queries":${results.size},"values":$values,"artifact":$artifact,""" +
+      s""""sf":"$sfDir","reps":$reps}""")
     spark.stop()
   }
 }

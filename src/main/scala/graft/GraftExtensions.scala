@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.CosineSimilarity
 
 /** SparkSessionExtensions entry point: registers graft's native Catalyst
-  * functions for SQL use. Install at session build time
-  * (`spark.sql.extensions=graft.GraftExtensions`) or call
-  * [[GraftExtensions.register]] on a live session.
+  * functions for SQL use, its analyzer rules and SQL parser, and the
+  * physical rule that keeps filter bounds out of generated source
+  * ([[graft.plans.StableLiterals]]). Install at session build time
+  * (`spark.sql.extensions=graft.GraftExtensions`); on a live session,
+  * [[GraftExtensions.register]] adds the functions alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -29,6 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // CREATE MATERIALIZED VIEW … AS SELECT — DDL sugar rewritten to the
     // create_view procedure (same definition file, same validations).
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
+    // Filter bounds read from the generated class's references, so reads
+    // that differ only in their bounds reuse one compiled class.
+    ext.injectColumnar(_ => graft.plans.StableLiterals.Install)
   }
 }
 

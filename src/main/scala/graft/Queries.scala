@@ -2334,7 +2334,7 @@ object Queries {
     // must be row-identical to it at every boundary.
     "q9B_stream_decontaminate" -> ((s, d) => {
       val state = streamedDeconState(s, d)
-      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/quarantine/batch_*"))
+      graft.streaming.Ingest.readSubstream(s, state, "quarantine")
         .select(col("doc_id"), col("n_contaminated"))
     }),
     // Stateful in-flight near-dup marking (round 8): first-wins
@@ -2346,7 +2346,7 @@ object Queries {
     // every verified (id_a < id_b) pair, aggregated.
     "q9C_stream_neardup" -> ((s, d) => {
       val state = streamedNearDupState(s, d)
-      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/flags/batch_*"))
+      graft.streaming.Ingest.readSubstream(s, state, "flags")
         .select(col("doc_id"), col("n_pairs"), col("max_jaccard"))
     }),
     // Offline reconciliation of the streamed first-wins near-dup state
@@ -2371,7 +2371,7 @@ object Queries {
     // sequential fold in SQL with the q8I JSD formula.
     "q9E_stream_drift" -> ((s, d) => {
       val state = streamedDriftState(s, d)
-      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/drift/batch_*"))
+      graft.streaming.Ingest.readSubstream(s, state, "drift")
         .select(col("batch_id"), col("n_docs"), col("n_grams"),
           col("js_div"), col("alarm"))
     }),
@@ -2409,7 +2409,7 @@ object Queries {
     // oracle replays the (batch, id)-ordered drop-later fold in SQL.
     "q9O_stream_exact_dedup" -> ((s, d) => {
       val state = streamedExactDedupState(s, d)
-      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/dups/batch_*")).select(col("doc_id"))
+      graft.streaming.Ingest.readSubstream(s, state, "dups").select(col("doc_id"))
     }),
     // Token-balanced output sharding (round 8): the corpus cut into
     // ~2000-token shards along the distributed hash-order prefix sum
@@ -2477,7 +2477,7 @@ object Queries {
       val state = streamedIvfIndexState(s, d)
       val emb = T.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 10000)
-      val cents = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/centroids/batch_*"))
+      val cents = graft.streaming.Ingest.readSubstream(s, state, "centroids")
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
       val streamed = graft.streaming.Ingest.ivfCellState(s, state)
@@ -2511,10 +2511,10 @@ object Queries {
       val state = streamedIvfPqIndexState(s, d)
       val emb = T.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 10000)
-      val cents = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/centroids/batch_*"))
+      val cents = graft.streaming.Ingest.readSubstream(s, state, "centroids")
         .select(col("cell_id"), col("centroid"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val bookRows = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/books/batch_*"))
+      val bookRows = graft.streaming.Ingest.readSubstream(s, state, "books")
         .select(col("s"), col("c"), col("vals"))
         .as[(Int, Int, Array[Double])].collect()
       val m = bookRows.map(_._1).max + 1
@@ -2664,7 +2664,7 @@ object Queries {
       val plantedF = Par.detach(
         T.embeddings(s, d).where(col("vec_id") % 10 === 0)
           .select(col("vec_id")).as[Long].collect())
-      val flags = graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/flags/batch_*"))
+      val flags = graft.streaming.Ingest.readSubstream(s, state, "flags")
         .select(col("id"), col("max_cos")).as[(Long, Double)].collect().toMap
       val planted = plantedF()
       val off = q9yTwinOffset(s, d)
@@ -2768,7 +2768,7 @@ object Queries {
     // (cum over (batch, hash, id) per source).
     "q9H_stream_quota" -> ((s, d) => {
       val state = streamedQuotaState(s, d)
-      graft.streaming.Ingest.pinnedRead(s, Seq(s"$state/docs/batch_*"))
+      graft.streaming.Ingest.readSubstream(s, state, "docs")
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("cum_tokens").cast("bigint").as("cum_tokens"))
     }),

@@ -41,6 +41,13 @@ import graft.model.Candle
   * and a dynamic-partition-overwrite of only those partitions. Nothing is
   * proportional to table size; everything is proportional to batch size ×
   * touched partitions.
+  *
+  * Read bounds never enter generated source: Spark writes every primitive
+  * literal into the Java it compiles, so each new `ts` bound of
+  * [[rangeScan]], a resample or a SQL read would compile new classes on
+  * the driver; [[graft.plans.StableLiterals]] (installed by
+  * [[graft.GraftExtensions]]) moves the filter's bounds into the compiled
+  * class's references, so such reads reuse one class.
   */
 final class CandleStore(spark: SparkSession, val path: String) {
   import CandleStore._

@@ -64,6 +64,22 @@ object Ingest {
                                 paths: Seq[String]): DataFrame =
     PinnedRead.read(spark, pinKey(paths.head), paths)
 
+  /** Every generation of one state substream — the newest complete
+    * `compact_upto_<k>` and the batches after it, as [[historyDirs]]
+    * lists them — in one read pinned on the substream dir. Reading the
+    * listed dirs rather than a `batch_*` glob keeps compacted history in
+    * the answer, and keeps Spark from probing the glob as a file-sink
+    * `_spark_metadata` dir (a WARN with a full stack per read).
+    */
+  private[graft] def readSubstream(spark: org.apache.spark.sql.SparkSession,
+                                   stateDir: String, sub: String): DataFrame = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
+    val dirs = historyDirs(fs, stateDir, sub, Long.MaxValue)
+    require(dirs.nonEmpty, s"no $sub state under $stateDir")
+    pinnedRead(spark, dirs)
+  }
+
   private def pinKey(p: String): String = {
     val path = new org.apache.hadoop.fs.Path(p)
     val n = path.getName
@@ -679,13 +695,8 @@ object Ingest {
     * glob would silently miss every re-stated verdict).
     */
   def nearDupFlags(spark: org.apache.spark.sql.SparkSession,
-                   stateDir: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
-    val dirs = historyDirs(fs, stateDir, "flags", Long.MaxValue)
-    require(dirs.nonEmpty, s"no near-dup flags state under $stateDir")
-    pinnedRead(spark, dirs)
-  }
+                   stateDir: String): DataFrame =
+    readSubstream(spark, stateDir, "flags")
 
   /** STATEFUL distribution-drift monitoring at ingest: each
     * micro-batch's hashed-unigram histogram is compared (Jensen-
