@@ -3,6 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // child processes over the whole run, for the artifact only
+    val starts = scala.util.Try(new ProcessStarts)
     val spark = GraftSession.builder(appName = "graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Deterministic name order: per-query timings stay comparable
@@ -99,6 +101,7 @@ object Bench {
       if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
         Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL_last.json"))
       else None
+    val processStarts = starts.flatMap(r => scala.util.Try(r.stop().size)).toOption
     outPath.foreach { path =>
       // reps > 1: medians measure STEADY-STATE query cost (one-time
       // fixture builds — stores, streams, bucketed tables — amortize
@@ -110,7 +113,8 @@ object Bench {
             s""","spread":${jmap(results.map(r => (r._1, r._4)))}"""
         else ""
       val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps$firstField}"""
+        s""""queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps$firstField""" +
+        processStarts.fold("")(n => s""","process_starts":$n""") + "}"
       try {
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path), full + "\n")
         System.err.println(s"[bench] full per-query artifact -> $path")

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * UTC session time, shuffle parallelism sized for the target (32 for
   * the local[32] harness — NOT the 200 default, which just makes tiny
   * partitions at this scale), nanos-timestamp reads enabled (the events
-  * table is Parquet TIMESTAMP(NANOS)), AQE on, and graft's native SQL
-  * functions registered.
+  * table is Parquet TIMESTAMP(NANOS)), AQE on, graft's native SQL
+  * functions registered, and a `file:` filesystem that starts no child
+  * process per file ([[graft.store.ForkFreeLocalFs]]).
   */
 object GraftSession {
 
@@ -54,6 +55,7 @@ object GraftSession {
       // Removed by a shutdown hook.
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      .config(graft.store.ForkFreeLocalFs.sparkConf)
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName = appName).getOrCreate()

@@ -192,13 +192,16 @@ object Ysf {
 
   /** One decoded row + its page's storage year (from the page HEADER —
     * not `year(ts)`, which is session-timezone-dependent while page
-    * years are UTC by format definition).
+    * years are UTC by format definition). Not private: the generated
+    * code of a private row class's encoder fails to compile (Janino
+    * finds no applicable accessor), and Spark then evaluates it
+    * interpreted.
     */
-  private final case class YsfRow(market: String, code: String,
-                                  candle_length: Int, ts: Timestamp,
-                                  open: Double, high: Double, low: Double,
-                                  close: Double, volume: Double,
-                                  bit_fields: Long, year: Int)
+  final case class YsfRow(market: String, code: String,
+                          candle_length: Int, ts: Timestamp,
+                          open: Double, high: Double, low: Double,
+                          close: Double, volume: Double,
+                          bit_fields: Long, year: Int)
 
   /** Read every `.ysf` page under `dir` (recursively) into a [[Candle]]
     * DataFrame plus the storage `year` column. Parallelism is per page

@@ -350,10 +350,8 @@ final class CandleStore(spark: SparkSession, val path: String) {
       !name.startsWith("_") && !name.startsWith(".")
     val stagedPrefix = s"_staging/$txid/"
     val moves = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && isData(f.getPath.getName)) {
+    ForkFreeLocalFs.filesUnder(fs, staging).foreach { f =>
+      if (isData(f.getPath.getName)) {
         val srcRel = relativize(f.getPath)
         moves += ((srcRel, srcRel.stripPrefix(stagedPrefix)))
       }
@@ -516,13 +514,10 @@ final class CandleStore(spark: SparkSession, val path: String) {
     fs.listStatus(rootP)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("market="))
       .foreach { top =>
-        val it = fs.listFiles(top.getPath, true)
-        while (it.hasNext) {
-          val st = it.next()
+        ForkFreeLocalFs.filesUnder(fs, top.getPath).foreach { st =>
           if (st.getPath.getName.endsWith(".parquet")) {
             nFiles += 1; bytes += st.getLen
             parts += st.getPath.getParent.toString
-            ()
           }
         }
       }
@@ -576,12 +571,9 @@ final class CandleStore(spark: SparkSession, val path: String) {
     CrossStoreTx.requireNoPendingCrossTx(spark, fs, txlogP, path)
     val cutoff = System.currentTimeMillis - minAgeMs
     def newestMtime(root: org.apache.hadoop.fs.FileStatus): Long = {
-      var newest = root.getModificationTime
-      if (root.isDirectory) {
-        val it = fs.listFiles(root.getPath, true)
-        while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
-      }
-      newest
+      if (!root.isDirectory) root.getModificationTime
+      else ForkFreeLocalFs.filesUnder(fs, root.getPath)
+        .foldLeft(root.getModificationTime)((t, f) => math.max(t, f.getModificationTime))
     }
     var removed = 0
     if (fs.exists(stagingRootP)) fs.listStatus(stagingRootP).foreach { s =>
@@ -909,7 +901,7 @@ object CandleStore {
     * unset) cannot encode fails the write with an opaque
     * `InvalidPathException`.
     */
-  private def withPathSafeKeys(batch: DataFrame): DataFrame =
+  private[store] def withPathSafeKeys(batch: DataFrame): DataFrame =
     Seq("market", "code").foldLeft(batch) { (df, k) =>
       val fault = keyFault(lit(k), col(k))
       df.withColumn(k, when(fault.isNull, col(k)).otherwise(raise_error(fault)))

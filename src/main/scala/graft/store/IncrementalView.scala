@@ -548,13 +548,11 @@ final class IncrementalView(
     var bytes = 0L
     val f = fs
     gens.foreach { case (_, _, dir, _) =>
-      val it = f.listFiles(dir, true)
-      while (it.hasNext) {
-        val s = it.next()
+      ForkFreeLocalFs.filesUnder(f, dir).foreach { s =>
         // DATA files only, as documented: `_SUCCESS` markers and the
         // gap-run meta would otherwise inflate the reported census
         val n = s.getPath.getName
-        if (s.isFile && !n.startsWith("_") && !n.startsWith(".")) {
+        if (!n.startsWith("_") && !n.startsWith(".")) {
           files += 1; bytes += s.getLen
         }
       }

@@ -810,7 +810,8 @@ final class VersionedCandleStore(spark: SparkSession, val path: String,
       (if (hasDel) Seq(coalesce(col("_deleted"), lit(false)).as("_deleted"))
        else Nil)): _*)
     val batchOrd = ordinalCol.map(c => col(c).cast("long")).getOrElse(lit(0L))
-    val deduped = batch
+    // the same partition columns as CandleStore, so the same key refusal
+    val deduped = CandleStore.withPathSafeKeys(batch)
       .withColumn("ts", date_trunc("second", col("ts")).cast("timestamp"))
       .withColumn("year", year(col("ts")))
       .withColumn("_ord", batchOrd)
@@ -1966,9 +1967,7 @@ final class VersionedCandleStore(spark: SparkSession, val path: String,
     var nFiles = 0L
     var bytes = 0L
     gens.lastOption.foreach { case (_, dir) =>
-      val it = f.listFiles(dir, true)
-      while (it.hasNext) {
-        val st = it.next()
+      ForkFreeLocalFs.filesUnder(f, dir).foreach { st =>
         val n = st.getPath.getName
         // commit files are tx-prefixed; a compacted generation's are
         // plain parquet part files — count both, never markers/metadata

@@ -19,6 +19,7 @@ object SparkTestSession {
         dir.toString
       })
       .config("spark.ui.enabled", "false")
+      .config(graft.store.ForkFreeLocalFs.sparkConf)
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
@@ -31,4 +32,14 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+  /** Runs `body` with the given session confs, then restores them. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -30,16 +30,6 @@ class StableLiteralsSpec extends SparkSpec {
   private def conditions(p: SparkPlan): Seq[Expression] =
     p.collect { case f: FilterExec => f.condition }
 
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("two rangeScans that differ only in their bounds compile nothing new") {
     val store = CandleStore(spark, tmpDir("stable-range") + "/t")
     store.upsert(candles("BTC"))

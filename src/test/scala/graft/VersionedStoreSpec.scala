@@ -61,6 +61,45 @@ class VersionedStoreSpec extends SparkSpec {
     assert(st.scan().select("open").as[Double].head() == 22.0)
   }
 
+  test("commit refuses a key its partition dir would lose: empty, or outside " +
+      "the path charset") {
+    val st = VersionedCandleStore(spark, tmpDir("vstore-keys") + "/v")
+    st.commit(Seq(c("BTC", "2022-03-01 10:00:00", 1)).toDF())
+    def state = (st.scan().collect().toSeq,
+      st.txLog().where($"kind" === "commit").select("tx_id").as[Long].collect().toSeq)
+    val before = state
+    val cs = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    // the refusal travels as a task failure: search the whole cause chain
+    def refusal(f: => Any): String =
+      Iterator.iterate[Throwable](intercept[Exception](f))(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+    val empty = refusal(st.commit(Seq(c("", "2022-03-01 11:00:00", 2)).toDF(),
+      batchId = Some(7L)))
+    assert(empty.contains("candle code ''") && empty.contains(cs.name), empty)
+    assert(state == before)
+    val noMarket = refusal(st.commit(
+      Seq(c("BTC", "2022-03-01 12:00:00", 3).copy(market = null)).toDF()))
+    assert(noMarket.contains("candle market null"), noMarket)
+    assert(state == before)
+
+    val code = "\uC0BC\uC131" // Samsung, 6 bytes in UTF-8
+    val nonAscii = Seq(c(code, "2022-03-01 13:00:00", 4)).toDF()
+    if (cs.newEncoder().canEncode(code)) {
+      st.commit(nonAscii)
+      assert(st.scan().where($"code" === code).select("open").as[Double]
+        .collect().toSeq == Seq(4.0))
+    } else {
+      val msg = refusal(st.commit(nonAscii))
+      assert(msg.contains(s"candle code '$code'") && msg.contains(cs.name), msg)
+      assert(state == before)
+    }
+    // the refused batch released its replay guard: a mended retry commits
+    st.commit(Seq(c("ETH", "2022-03-01 11:00:00", 2)).toDF(), batchId = Some(7L))
+    assert(st.scan().where($"code" === "ETH").select("open").as[Double]
+      .collect().toSeq == Seq(2.0))
+  }
+
   test("concurrent committers mint distinct monotonic tx ids; both batches readable") {
     val st = VersionedCandleStore(spark, tmpDir("vstore-conc") + "/v")
     val perThread = 2

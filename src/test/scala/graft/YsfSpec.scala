@@ -203,6 +203,18 @@ class YsfSpec extends SparkSpec {
     }
   }
 
+  test("read compiles its row encoder: no interpreted fallback") {
+    val dir = tmpDir("ysf-codegen")
+    Ysf.write(Seq(candle(Y2024 + 10, 1.0), candle(Y2024 - 60, 2.0)).toDF(), dir)
+    // both settings make a failed compile throw instead of falling back
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false") {
+      val got = Ysf.read(spark, dir).select("code", "open", "year")
+        .as[(String, Double, Int)].collect().sorted.toSeq
+      assert(got == Seq(("005930", 1.0, 2024), ("005930", 2.0, 2023)))
+    }
+  }
+
   test("read feeds the CandleStore schema (interop migration path)") {
     val dir = tmpDir("ysf-mig")
     Ysf.write(Seq(candle(Y2024 + 10, 1.0), candle(Y2024 + 70, 2.0)).toDF(), dir)
