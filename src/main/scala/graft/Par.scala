@@ -50,10 +50,13 @@ private[graft] object Par {
     * childValue does, so a task mutating its own properties cannot leak
     * into a sibling), restoring the worker thread's own after.
     */
-  private def carryingProps[T](body: () => T): () => T =
+  private def context: Option[SparkContext] =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext) match {
+      .map(_.sparkContext)
+
+  private def carryingProps[T](body: () => T): () => T =
+    context match {
       case None => body
       case Some(sc) =>
         val callerProps = getProps.invoke(sc)
@@ -98,20 +101,57 @@ private[graft] object Par {
       }
     }
 
-  /** Run the thunks concurrently; all settle, then the FIRST failure
-    * (input order) is rethrown with the others suppressed — a caller
-    * must not see a half-applied overlap succeed silently. Results in
-    * input order.
+  /** Run the thunks concurrently; all settle, then the failure that
+    * came FIRST is rethrown with the others suppressed — a caller must
+    * not see a half-applied overlap succeed silently. Results in input
+    * order.
+    *
+    * The thunks' Spark jobs carry one job tag per call, and the first
+    * failure cancels that tag (interrupting the tasks), again until
+    * every sibling has settled, so a sibling that starts a job after
+    * the first cancel is cancelled too: a failed sink no longer leaves
+    * its siblings' writes running into the caller's retry. A tag rather
+    * than a job group, because the caller's group stays on every job —
+    * a streaming query cancels its batch's jobs by group when stopped.
     */
-  def settleAll[T](fs: Seq[() => T]): Seq[T] = {
-    val rs = settle(fs)
-    rs.collectFirst { case Left(t) => t }.foreach { first =>
-      rs.collect { case Left(o) if o ne first => o }
-        .foreach(first.addSuppressed)
-      throw first
+  def settleAll[T](fs: Seq[() => T]): Seq[T] =
+    if (fs.sizeIs <= 1) fs.map(_())
+    else {
+      val sc = context
+      val tag = s"graft-par-${java.util.UUID.randomUUID}"
+      val lock = new Object
+      var pending = fs.size
+      var first: Throwable = null
+      val futs = fs.map { f =>
+        val run = carryingProps { () =>
+          try {
+            sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+            f()
+          } catch {
+            case t: Throwable =>
+              lock.synchronized { if (first == null) first = t }
+              throw t
+          } finally lock.synchronized { pending -= 1; lock.notifyAll() }
+        }
+        pool.submit(new Callable[T] { def call(): T = run() })
+      }
+      lock.synchronized {
+        while (pending > 0 && first == null) lock.wait()
+        while (pending > 0) {
+          sc.foreach(_.cancelJobsWithTag(tag, "a sibling in Par.settleAll failed"))
+          lock.wait(50)
+        }
+      }
+      val rs = futs.map { fu =>
+        try Right(fu.get())
+        catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      if (first != null) {
+        rs.collect { case Left(o) if o ne first => o }.foreach(first.addSuppressed)
+        throw first
+      }
+      rs.collect { case Right(v) => v }
     }
-    rs.collect { case Right(v) => v }
-  }
 
   /** Map `items` with at most `maxThreads` concurrent slices
     * (consecutive grouping, so results keep input order); first failure

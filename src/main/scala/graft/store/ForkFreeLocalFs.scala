@@ -2,8 +2,9 @@ package graft.store
 
 import java.io.{File, FileNotFoundException, IOException}
 import java.net.URI
-import java.nio.file.{Files, InvalidPathException}
-import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
+import java.nio.file.{Files, InvalidPathException, NoSuchFileException}
+import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, PosixFileAttributeView,
+  PosixFilePermission, UserPrincipal}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,11 +16,12 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's raw local filesystem without its child processes. Without
   * libhadoop, the stock class runs `chmod` for every file and directory
-  * it creates (`setPermission`) and `readlink` on every
+  * it creates (`setPermission`), `readlink` on every
   * `getFileLinkStatus` (each checkpoint-log rename of the streaming
-  * engine makes several). Both are answered here with `java.nio`, with
-  * the stock answers; everything else — create, rename, `.crc` files —
-  * is Hadoop's own code.
+  * engine makes several), and `ls -ld` for a status whose permission,
+  * owner or group is read. All three are answered here with `java.nio`,
+  * with the stock answers; everything else — create, rename, `.crc`
+  * files — is Hadoop's own code.
   */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -38,6 +40,31 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
       Files.setPosixFilePermissions(file, PosixFilePermission.values
         .filter(b => (mode >> (8 - b.ordinal) & 1) == 1).toSet.asJava)
     }
+  }
+
+  /** The stock status, whose permission, owner and group load on first
+    * use — here from `java.nio`, there by running `ls -ld`, so every
+    * caller that reads them (`listFiles`'s `LocatedFileStatus`,
+    * `FileUtil.copy`) started a process per entry. A symlink answers
+    * with its target's, as there. A missing path, and a file store
+    * without POSIX attributes, take the stock path.
+    */
+  override def getFileStatus(f: Path): FileStatus = {
+    val file = pathToFile(f)
+    if (!file.exists ||
+        Files.getFileAttributeView(file.toPath, classOf[PosixFileAttributeView]) == null)
+      super.getFileStatus(f)
+    else new ForkFreeRawLocalFileSystem.NioStatus(file, getDefaultBlockSize(f),
+      new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
+  }
+
+  /** The stock listing, whose entries are [[getFileStatus]]'s; a file
+    * lists as its own status.
+    */
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val file = pathToFile(f)
+    if (file.exists && !file.isDirectory) Array(getFileStatus(f))
+    else super.listStatus(f)
   }
 
   /** The stock (deprecated-status) answer: `readlink` of
@@ -68,6 +95,39 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
       st.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, st.getPath, st.getSymlink))
       st
     }
+  }
+}
+
+object ForkFreeRawLocalFileSystem {
+
+  private def accessTime(file: File): Long =
+    try Files.readAttributes(file.toPath, classOf[BasicFileAttributes]).lastAccessTime.toMillis
+    catch { case _: NoSuchFileException => throw new FileNotFoundException(s"File $file does not exist") }
+
+  /** The stock local status (`DeprecatedRawLocalFileStatus`), with the
+    * lazy permission, owner and group read through `java.nio`.
+    */
+  private final class NioStatus(file: File, blockSize: Long, path: Path)
+      extends FileStatus(file.length, file.isDirectory, 1, blockSize, file.lastModified,
+        accessTime(file), null, null, null, path) {
+    private var loaded = false
+
+    private def load(): Unit = synchronized {
+      if (!loaded) {
+        val a =
+          try Files.readAttributes(file.toPath, "unix:mode,owner,group")
+          catch { case e: IOException =>
+            throw new RuntimeException(s"Error while reading the permissions of $file", e) }
+        setPermission(new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort))
+        setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
+        setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
+        loaded = true
+      }
+    }
+
+    override def getPermission: FsPermission = { load(); super.getPermission }
+    override def getOwner: String = { load(); super.getOwner }
+    override def getGroup: String = { load(); super.getGroup }
   }
 }
 
@@ -103,9 +163,9 @@ class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
 object ForkFreeLocalFs {
   /** The files under `dir`, recursively, as `FileSystem.listFiles(dir,
     * true)` lists them, but from plain `listStatus` calls:
-    * `listFiles` builds a `LocatedFileStatus` per entry, whose
-    * constructor reads the permission, and Hadoop's local status loads
-    * that by running `ls -ld`.
+    * `listFiles` builds a `LocatedFileStatus` per entry, which looks up
+    * block locations and reads the permission — on a stock local
+    * filesystem, by running `ls -ld`.
     */
   def filesUnder(fs: FileSystem, dir: Path): Iterator[FileStatus] =
     fs.listStatus(dir).iterator.flatMap { st =>

@@ -330,8 +330,8 @@ object Ingest {
       spark.sparkContext.hadoopConfiguration)
     // strictly-earlier batches only: a retry must not see its own state
     val histDirs = historyDirs(fs, stateDir, "grams", batchId)
-    // floor the batch's scan parallelism before the per-row gram pass:
-    // a one-file micro-batch arrives as ONE task (guide §2.5)
+    // floor the scan parallelism of a batch big enough to pay for a
+    // shuffle before the per-row gram pass (guide §2.5)
     val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
       .localCheckpoint() // read by flag + anti-join + gram dump
     val flagged =
@@ -428,18 +428,21 @@ object Ingest {
     // strictly-earlier batches only: a retry must not see its own state
     def earlier(sub: String): Seq[String] =
       historyDirs(fs, stateDir, sub, batchId)
-    // floor the batch's scan parallelism before the shingle+signature
-    // pass: a one-file micro-batch arrives as ONE task (guide §2.5)
-    val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
-      .localCheckpoint() // read by state dump + flags anti-join
-    // ONE tokenize+shingle pass for the batch; reused by banding + verify
-    val docs = b.select(col(idCol).cast("long").as("id"),
-      Dedup.shinglesUdf(shingleN)(graft.llm.TextStats.tokens(col(textCol))).as("sh"))
-      .where(size(col("sh")) > 0)
+    // the one materialization: the batch's rows with ONE tokenize+
+    // shingle pass and the band keys of every doc with a shingle —
+    // read by banding, verify and the four sinks. The shingle+signature
+    // pass runs above the scan-parallelism floor (a batch too small
+    // for it stays one task).
+    val b = Dedup.scanParallel(batch, col(idCol))
+      .withColumn("_nd_id", col(idCol).cast("long"))
+      .withColumn("_nd_sh",
+        Dedup.shinglesUdf(shingleN)(graft.llm.TextStats.tokens(col(textCol))))
+      .withColumn("_nd_bands", when(size(col("_nd_sh")) > 0, Dedup.lshBandKeys(
+        Dedup.minhashSignatureUdf(k)(col("_nd_sh")), bands, rowsPerBand)))
       .localCheckpoint()
-    val banded = docs.select(col("id"), explode(Dedup.lshBandKeys(
-      Dedup.minhashSignatureUdf(k)(col("sh")), bands, rowsPerBand)).as("band"))
-      .localCheckpoint() // reused: within-batch buckets, cross join, state dump
+    val docs = b.where(size(col("_nd_sh")) > 0)
+      .select(col("_nd_id").as("id"), col("_nd_sh").as("sh"))
+    val banded = b.select(col("_nd_id").as("id"), explode(col("_nd_bands")).as("band"))
     // within-batch candidates: the batch operator's in-bucket expansion
     val within = banded.groupBy(col("band")).agg(collect_list(col("id")).as("ids"))
       .where(size(col("ids")) > 1)
@@ -456,7 +459,7 @@ object Ingest {
         .join(broadcast(banded.select(col("band"), col("id").as("id_b"))),
           Seq("band"))
         .select(col("id_a"), col("id_b"))
-    val cand = within.unionByName(cross).distinct().localCheckpoint()
+    val cand = within.unionByName(cross).distinct()
     // exact-Jaccard verify on candidates only; history shingles are
     // recomputed for CANDIDATE ids alone (semi-join, candidate ids
     // broadcast — history text never shuffles)
@@ -484,9 +487,10 @@ object Ingest {
     graft.Par.settleAll(Seq(
       () => flags.select(col("_fid").as(idCol), col("n_pairs"), col("max_jaccard"))
         .write.mode("overwrite").parquet(s"$stateDir/flags/batch_$batchId"),
-      () => b.join(flags, b(idCol).cast("long") === col("_fid"), "left_anti")
+      () => b.join(flags, col("_nd_id") === col("_fid"), "left_anti")
+        .drop("_nd_id", "_nd_sh", "_nd_bands")
         .write.mode("overwrite").parquet(s"$stateDir/docs/batch_$batchId"),
-      () => b.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      () => b.select(col("_nd_id").as("id"), col(textCol).as("text"))
         .write.mode("overwrite").parquet(s"$stateDir/all/batch_$batchId"),
       () => banded.select(col("band"), col("id"))
         .write.mode("overwrite").parquet(s"$stateDir/bands/batch_$batchId")))
@@ -919,7 +923,8 @@ object Ingest {
     * Scale posture: per micro-batch the history-sized work is one scan
     * of the digest state joined against the BATCH's digests (batch
     * side broadcast — history never shuffles); everything else is
-    * batch-sized. At extreme history, bucket `hashes/` by digest
+    * batch-sized, and the three sinks filter one materialization of
+    * the batch. At extreme history, bucket `hashes/` by digest
     * prefix so the probe prunes at the file level.
     */
   def startExactDedupIngest(stream: DataFrame, stateDir: String,
@@ -946,40 +951,39 @@ object Ingest {
       new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
     // strictly-earlier batches only: a retry must not see its own state
     val histDirs = historyDirs(fs, stateDir, "hashes", batchId)
+    val digest = sha2(lower(trim(col(textCol))), 256)
+    val id = col(idCol).cast("long")
+    val byDigest = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("_digest")).orderBy(id)
+    // any digest seen in an earlier batch blocks the whole batch group:
+    // history semi-joined with the batch's digests (batch side
+    // broadcast — history never shuffles), then an existence test,
+    // which holds once however many history dirs carry the digest
+    val seen =
+      if (histDirs.isEmpty) lit(false)
+      else pinnedRead(spark, histDirs).select(col("_digest").as("_seen"))
+        .join(broadcast(batch.select(digest.as("_seen"))), Seq("_seen"), "left_semi")
+        .where(col("_seen") === col("_digest").outer())
+        .exists()
+    // the one materialization: within a digest, the first row (its
+    // hashes/ entry) and the winner (lowest id); a null digest never
+    // blocks or loses
     val b = batch
-      .withColumn("_digest", sha2(lower(trim(col(textCol))), 256))
-      .localCheckpoint() // read by winners + state dump
-    // within-batch winner per digest = lowest id
-    val winners = b.groupBy(col("_digest"))
-      .agg(min(col(idCol).cast("long")).as("_win"))
-    // any digest seen in an earlier batch blocks the whole batch group
-    val blocked =
-      if (histDirs.isEmpty)
-        b.select(col("_digest")).limit(0)
-      else pinnedRead(spark, histDirs)
-        .join(broadcast(b.select(col("_digest")).distinct()),
-          Seq("_digest"), "left_semi")
-        // a digest present in >=2 uncompacted history dirs appears once
-        // per dir after the semi-join; the flag join below is a LEFT
-        // join, so without this distinct each such digest would fan the
-        // batch rows out and dups/ would record a dropped id twice —
-        // and only until compaction distincts the state, breaking the
-        // value-identical-compaction contract
-        .distinct()
-    val flagged = b
-      .join(winners, Seq("_digest"))
-      .join(broadcast(blocked.withColumn("_blk", lit(true))),
-        Seq("_digest"), "left")
-      .where(col("_blk") || col(idCol).cast("long") =!= col("_win"))
-      .select(col(idCol))
+      .withColumn("_digest", digest)
+      .withColumn("_first", row_number().over(byDigest) === 1)
+      .withColumn("_win", min(id).over(byDigest.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+      .withColumn("_dup", coalesce(
+        col("_digest").isNotNull && (seen || id =!= col("_win")), lit(false)))
       .localCheckpoint()
-    // three independent sinks over checkpointed inputs (guide §2.6)
+    // three independent sinks, each a filter of the checkpoint (guide §2.6)
     graft.Par.settleAll(Seq(
-      () => b.join(flagged, Seq(idCol), "left_anti").drop("_digest")
+      () => b.where(!col("_dup")).drop("_digest", "_first", "_win", "_dup")
         .write.mode("overwrite").parquet(s"$stateDir/docs/batch_$batchId"),
-      () => flagged.write.mode("overwrite")
-        .parquet(s"$stateDir/dups/batch_$batchId"),
-      () => b.select(col("_digest")).distinct()
+      () => b.where(col("_dup")).select(col(idCol))
+        .write.mode("overwrite").parquet(s"$stateDir/dups/batch_$batchId"),
+      () => b.where(col("_first")).select(col("_digest"))
         .write.mode("overwrite").parquet(s"$stateDir/hashes/batch_$batchId")))
     ()
   }
@@ -1502,9 +1506,9 @@ object Ingest {
                                      keepRaw: Boolean = false): Unit = {
     import graft.llm.Similarity
     if (batch.isEmpty) return
-    // floor the batch's scan parallelism: the PQ encode (and a first-
-    // batch book train) is the heaviest per-row kernel in the corpus,
-    // and a one-file micro-batch arrives as ONE task (guide §2.5)
+    // floor the scan parallelism of a batch big enough to pay for a
+    // shuffle: the PQ encode (and a first-batch book train) is the
+    // heaviest per-row kernel in the corpus (guide §2.5)
     val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
       .localCheckpoint() // read by train (maybe) + encode
     val (cents, books) = ensurePqQuantizers(b, batchId, stateDir, idCol,
@@ -1533,22 +1537,26 @@ object Ingest {
     * [[ensureCentroids]]+the old strictly-earlier book read, made
     * generation-aware so every batch AFTER a re-shard encodes under the
     * re-trained quantizers — codes stay comparable within a generation.
+    * A generation already read comes from [[FrozenPq]], without a job.
     */
   private def ensurePqQuantizers(b: DataFrame, batchId: Long,
                                  stateDir: String, idCol: String,
                                  vecCol: String, nCells: Int, iters: Int,
-                                 m: Int, ks: Int): (Array[(Long, Array[Double])], Array[Array[Array[Double]]]) = {
+                                 m: Int, ks: Int): FrozenPq.Quantizers = {
     import graft.llm.Similarity
     val spark = b.sparkSession
     import spark.implicits._
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
     val (centDirs, bookDirs) = ivfPqQuantizerDirs(fs, stateDir, batchId)
+    def readCents() = pinnedRead(spark, centDirs)
+      .select(col("cell_id"), col("centroid"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    if (centDirs.nonEmpty && bookDirs.nonEmpty)
+      return FrozenPq.get(fs, centDirs ++ bookDirs, m, ks)(
+        (readCents(), readBooks(spark, bookDirs, m, ks)))
     val cents =
-      if (centDirs.nonEmpty)
-        pinnedRead(spark, centDirs)
-          .select(col("cell_id"), col("centroid"))
-          .as[(Long, Array[Double])].collect().sortBy(_._1)
+      if (centDirs.nonEmpty) readCents()
       else {
         val trained = Similarity.kmeansCentroids(b, idCol, vecCol, nCells, iters)
         trained.toSeq.toDF("cell_id", "centroid")
@@ -1564,6 +1572,39 @@ object Ingest {
         trained
       }
     (cents, books)
+  }
+
+  /** Frozen PQ quantizers already read, keyed by m, ks and the part
+    * files of their generation's dirs. A part file's name carries its
+    * write job's UUID, so a re-shard generation, or a training dir that
+    * a retried first batch rewrote, is a new key and is read afresh: an
+    * entry is never stale, only evicted (the least recently used
+    * beyond `MaxEntries`).
+    */
+  private[graft] object FrozenPq {
+    type Quantizers = (Array[(Long, Array[Double])], Array[Array[Array[Double]]])
+    private val MaxEntries = 8
+    private val entries =
+      new java.util.LinkedHashMap[(Int, Int, Seq[String]), Quantizers](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(Int, Int, Seq[String]), Quantizers]): Boolean =
+          size > MaxEntries
+      }
+
+    def get(fs: org.apache.hadoop.fs.FileSystem, dirs: Seq[String], m: Int, ks: Int)(
+        read: => Quantizers): Quantizers = {
+      val key = (m, ks, dirs.flatMap(d =>
+        fs.listStatus(new org.apache.hadoop.fs.Path(d)).map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          .map(_.toString).sorted))
+      entries.synchronized(Option(entries.get(key))).getOrElse {
+        val q = read
+        entries.synchronized(entries.put(key, q))
+        q
+      }
+    }
+
+    def clear(): Unit = entries.synchronized(entries.clear())
   }
 
   /** The (centroid dirs, codebook dirs) a PQ-index participant at batch

@@ -95,6 +95,7 @@ class ForkFreeLocalFsSpec extends SparkSpec {
     Thread.sleep(500)
     // the recorder is live: one process started is one recorded
     assert(starts(new ProcessBuilder("true").start().waitFor()) == Seq("true"))
+    val listed = scala.collection.mutable.ArrayBuffer.empty[(Path, FsPermission, String, String)]
     val started = starts {
       spark.range(0, 1000, 1, 4).write.parquet(s"$base/p")
       CandleStore(spark, s"$base/store").upsert(Seq(
@@ -109,8 +110,23 @@ class ForkFreeLocalFsSpec extends SparkSpec {
         q.processAllAvailable()
         assert(q.lastProgress.batchId == 0L)
       } finally q.stop()
+      // a recursive listing that reads each entry's permission: every
+      // LocatedFileStatus copies it
+      val it = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+        .listFiles(new Path(base), true)
+      while (it.hasNext) {
+        val st = it.next()
+        listed += ((st.getPath, st.getPermission, st.getOwner, st.getGroup))
+      }
     }
     assert(started.size == 0, started.mkString("\n"))
+    // the listing answers as the stock status, which runs `ls -ld`
+    val stock = local(new RawLocalFileSystem)
+    assert(listed.size > 10, listed.size)
+    for ((p, perm, owner, group) <- listed) {
+      val st = stock.getFileStatus(p)
+      assert((perm, owner, group) == ((st.getPermission, st.getOwner, st.getGroup)), p)
+    }
     assert(spark.read.parquet(s"$base/p").count() == 1000)
     assert(spark.read.parquet(s"$base/state/dups/batch_*").select("doc_id").as[Long]
       .collect().toSeq == Seq(2L))

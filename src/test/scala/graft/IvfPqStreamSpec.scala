@@ -576,4 +576,57 @@ class IvfPqStreamSpec extends SparkSpec {
       s"PQ state ($pq B) not slimmer than 1/5 of raw state ($raw B) " +
         "for 3000 64-dim vectors")
   }
+
+  // ------------------------- quantizer cache ----------------------- //
+  private def batchCodes(stateDir: String, i: Int): Set[(Long, Long, Seq[Byte])] =
+    spark.read.parquet(s"$stateDir/codes/batch_$i")
+      .select(col("cell_id").cast("long"), col("id"), col("code")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSet
+
+  test("quantizer cache: the batch after an adopted re-shard encodes as with " +
+      "the cache cleared, not under the cached frozen quantizers") {
+    val m = 4; val ks = 16
+    val batches = driftBatches
+    def run(stateDir: String, i: Int): Unit =
+      Ingest.ivfPqIndexBatch(batches(i).toDF("vec_id", "embedding"), i.toLong,
+        stateDir, "vec_id", "embedding", nCells = 4, iters = 4, m = m, ks = ks)
+    val frozen = tmpDir("pq-cache-frozen")
+    (0 to 3).foreach(run(frozen, _))
+    // batches 1 and 2 read batch 0's quantizers, so the cache holds them
+    val stateDir = tmpDir("pq-cache-reshard")
+    (0 to 2).foreach(run(stateDir, _))
+    assert(Ingest.reshardIvfPqIndex(spark, stateDir,
+      batches.take(3).flatten.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", upTo = 3L, iters = 4))
+    run(stateDir, 3)
+    val cached = batchCodes(stateDir, 3)
+    Ingest.FrozenPq.clear()
+    run(stateDir, 3)
+    assert(cached == batchCodes(stateDir, 3), "the cache served a stale generation")
+    assert(cached != batchCodes(frozen, 3),
+      "the re-shard generation encodes like the frozen one: the check cannot tell")
+  }
+
+  test("quantizer cache: batch_0 quantizers rewritten by a retried first batch " +
+      "are read again, not served stale") {
+    val m = 4; val ks = 16
+    val batches = driftBatches
+    val stateDir = tmpDir("pq-cache-retry")
+    def run(rows: Seq[(Long, Seq[Float])], i: Int): Unit =
+      Ingest.ivfPqIndexBatch(rows.toDF("vec_id", "embedding"), i.toLong,
+        stateDir, "vec_id", "embedding", nCells = 4, iters = 4, m = m, ks = ks)
+    run(batches(0), 0)
+    run(batches(1), 1) // caches batch 0's quantizers
+    val first = batchCodes(stateDir, 1)
+    // the retry rewrites centroids/batch_0 and books/batch_0; other
+    // vectors make the rewrite visible in the codes
+    run(batches(2), 0)
+    run(batches(1), 1)
+    val afterRetry = batchCodes(stateDir, 1)
+    Ingest.FrozenPq.clear()
+    run(batches(1), 1)
+    assert(afterRetry == batchCodes(stateDir, 1), "the cache served the replaced quantizers")
+    assert(afterRetry != first,
+      "the rewritten quantizers encode like the first ones: the check cannot tell")
+  }
 }

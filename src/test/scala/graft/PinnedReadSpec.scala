@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.store.PinnedRead
@@ -15,33 +11,6 @@ import graft.store.PinnedRead
   */
 class PinnedReadSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` starts on this thread. Listener events arrive
-    * asynchronously but in order, so once a marker job run after `body`
-    * is seen, every job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"pinned-read-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`tag`) => jobs.incrementAndGet(); ()
-          case Some(g) if g == tag + "-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(tag, "body")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(tag + "-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never seen")
-      jobs.get
-    } finally sc.removeSparkListener(l)
-  }
 
   test("a second read of a key starts no Spark job before an action") {
     val dir = tmpDir("pin-jobs") + "/t"
