@@ -45,16 +45,17 @@ private[graft] object Par {
     classOf[SparkContext].getMethod("setLocalProperties",
       classOf[java.util.Properties])
 
-  /** Wrap `body` to run under a clone of the SUBMITTING thread's Spark
-    * local properties (cloned per task, as InheritableThreadLocal's
-    * childValue does, so a task mutating its own properties cannot leak
-    * into a sibling), restoring the worker thread's own after.
-    */
+  /** The active (else default) session's SparkContext, if any. */
   private def context: Option[SparkContext] =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext)
 
+  /** Wrap `body` to run under a clone of the SUBMITTING thread's Spark
+    * local properties (cloned per task, as InheritableThreadLocal's
+    * childValue does, so a task mutating its own properties cannot leak
+    * into a sibling), restoring the worker thread's own after.
+    */
   private def carryingProps[T](body: () => T): () => T =
     context match {
       case None => body

@@ -3137,8 +3137,8 @@ object Queries {
         famB.where(pmod(col("vec_id"), lit(3)) === 2))
       batches.zipWithIndex.foreach { case (b0, i) =>
         // ONE materialization per batch feeds both the trigger's
-        // quality scans and the assignment/state dump (guide §5), with
-        // the scan-parallelism floor's size rule (guide §2.5)
+        // quality scans and the assignment/state dump (guide §5),
+        // floored to cluster parallelism (guide §2.5)
         val b = graft.llm.Dedup.scanParallel(b0, col("vec_id"))
           .localCheckpoint()
         graft.streaming.Ingest.driftTriggeredRefresh(b, i.toLong, stateDir,

@@ -538,27 +538,20 @@ object Dedup {
     *   buckets lose recall only for documents that share NO other
     *   small bucket. Default: unbounded (exact banding semantics).
     */
-  /** Scan-parallelism floor for an expensive per-row pass (guide §2.5
-    * "input skew — repartition immediately after the read"): a
-    * single-row-group parquet file arrives as ONE task, since
-    * `maxPartitionBytes` cannot split inside a row group, and the
-    * kernel serializes on one core while the rest idle.
-    *
-    * The size rule comes first: a plan whose size estimate is below
-    * `spark.sql.files.openCostInBytes` — the bytes Spark itself prices
-    * one file open at — is too small to pay for a shuffle job, and is
-    * returned as is (a 60 KB streaming micro-batch, whose file source
-    * reports its file bytes without running a job). Only a plan at
-    * least that big is hash-repartitioned on the (unique) id column —
-    * deterministic, no pre-sort — and only when it has fewer partitions
-    * than the default parallelism; an at-scale scan (thousands of row
-    * groups) already has enough, so nothing extra shuffles there.
+  /** Scan-parallelism floor for an expensive per-row text pass (guide
+    * §2.5 "input skew — repartition immediately after the read"): the
+    * testdata tables are single-row-group parquet files, so a scan
+    * arrives as ONE task and the tokenize+shingle+signature kernel
+    * serializes on one core while the rest idle — `maxPartitionBytes`
+    * cannot split inside a row group. When the plan has fewer
+    * partitions than the default parallelism, hash-repartition on the
+    * (unique) id column — deterministic, no pre-sort; any at-scale
+    * scan (thousands of row groups) already exceeds the floor, so
+    * nothing extra ever shuffles there.
     */
   private[graft] def scanParallel(df: DataFrame, key: Column): DataFrame = {
-    val minBytes = df.sparkSession.sessionState.conf.filesOpenCostInBytes
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes ||
-        df.rdd.getNumPartitions >= target) df
+    if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
   }
 

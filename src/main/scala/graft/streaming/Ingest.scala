@@ -330,8 +330,8 @@ object Ingest {
       spark.sparkContext.hadoopConfiguration)
     // strictly-earlier batches only: a retry must not see its own state
     val histDirs = historyDirs(fs, stateDir, "grams", batchId)
-    // floor the scan parallelism of a batch big enough to pay for a
-    // shuffle before the per-row gram pass (guide §2.5)
+    // floor the batch's scan parallelism before the per-row gram pass:
+    // a one-file micro-batch arrives as ONE task (guide §2.5)
     val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
       .localCheckpoint() // read by flag + anti-join + gram dump
     val flagged =
@@ -428,21 +428,17 @@ object Ingest {
     // strictly-earlier batches only: a retry must not see its own state
     def earlier(sub: String): Seq[String] =
       historyDirs(fs, stateDir, sub, batchId)
-    // the one materialization: the batch's rows with ONE tokenize+
-    // shingle pass and the band keys of every doc with a shingle —
-    // read by banding, verify and the four sinks. The shingle+signature
-    // pass runs above the scan-parallelism floor (a batch too small
-    // for it stays one task).
-    val b = Dedup.scanParallel(batch, col(idCol))
-      .withColumn("_nd_id", col(idCol).cast("long"))
-      .withColumn("_nd_sh",
-        Dedup.shinglesUdf(shingleN)(graft.llm.TextStats.tokens(col(textCol))))
-      .withColumn("_nd_bands", when(size(col("_nd_sh")) > 0, Dedup.lshBandKeys(
-        Dedup.minhashSignatureUdf(k)(col("_nd_sh")), bands, rowsPerBand)))
+    // no scan-parallelism floor: a micro-batch of this body is too
+    // small to pay a shuffle job for spreading its shingle pass
+    val b = batch.localCheckpoint() // read by state dump + flags anti-join
+    // ONE tokenize+shingle pass for the batch; reused by banding + verify
+    val docs = b.select(col(idCol).cast("long").as("id"),
+      Dedup.shinglesUdf(shingleN)(graft.llm.TextStats.tokens(col(textCol))).as("sh"))
+      .where(size(col("sh")) > 0)
       .localCheckpoint()
-    val docs = b.where(size(col("_nd_sh")) > 0)
-      .select(col("_nd_id").as("id"), col("_nd_sh").as("sh"))
-    val banded = b.select(col("_nd_id").as("id"), explode(col("_nd_bands")).as("band"))
+    val banded = docs.select(col("id"), explode(Dedup.lshBandKeys(
+      Dedup.minhashSignatureUdf(k)(col("sh")), bands, rowsPerBand)).as("band"))
+      .localCheckpoint() // reused: within-batch buckets, cross join, state dump
     // within-batch candidates: the batch operator's in-bucket expansion
     val within = banded.groupBy(col("band")).agg(collect_list(col("id")).as("ids"))
       .where(size(col("ids")) > 1)
@@ -459,7 +455,7 @@ object Ingest {
         .join(broadcast(banded.select(col("band"), col("id").as("id_b"))),
           Seq("band"))
         .select(col("id_a"), col("id_b"))
-    val cand = within.unionByName(cross).distinct()
+    val cand = within.unionByName(cross).distinct().localCheckpoint()
     // exact-Jaccard verify on candidates only; history shingles are
     // recomputed for CANDIDATE ids alone (semi-join, candidate ids
     // broadcast — history text never shuffles)
@@ -487,10 +483,9 @@ object Ingest {
     graft.Par.settleAll(Seq(
       () => flags.select(col("_fid").as(idCol), col("n_pairs"), col("max_jaccard"))
         .write.mode("overwrite").parquet(s"$stateDir/flags/batch_$batchId"),
-      () => b.join(flags, col("_nd_id") === col("_fid"), "left_anti")
-        .drop("_nd_id", "_nd_sh", "_nd_bands")
+      () => b.join(flags, b(idCol).cast("long") === col("_fid"), "left_anti")
         .write.mode("overwrite").parquet(s"$stateDir/docs/batch_$batchId"),
-      () => b.select(col("_nd_id").as("id"), col(textCol).as("text"))
+      () => b.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
         .write.mode("overwrite").parquet(s"$stateDir/all/batch_$batchId"),
       () => banded.select(col("band"), col("id"))
         .write.mode("overwrite").parquet(s"$stateDir/bands/batch_$batchId")))
@@ -956,13 +951,15 @@ object Ingest {
     val byDigest = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_digest")).orderBy(id)
     // any digest seen in an earlier batch blocks the whole batch group:
-    // history semi-joined with the batch's digests (batch side
-    // broadcast — history never shuffles), then an existence test,
-    // which holds once however many history dirs carry the digest
+    // history semi-joined with the batch's digests, then an existence
+    // test, which holds once however many history dirs carry the
+    // digest. Both joins broadcast their batch-sized side by hint, not
+    // by size estimate — the semi-join's is history's — so history
+    // never shuffles, however large it grows
     val seen =
       if (histDirs.isEmpty) lit(false)
-      else pinnedRead(spark, histDirs).select(col("_digest").as("_seen"))
-        .join(broadcast(batch.select(digest.as("_seen"))), Seq("_seen"), "left_semi")
+      else broadcast(pinnedRead(spark, histDirs).select(col("_digest").as("_seen"))
+        .join(broadcast(batch.select(digest.as("_seen"))), Seq("_seen"), "left_semi"))
         .where(col("_seen") === col("_digest").outer())
         .exists()
     // the one materialization: within a digest, the first row (its
@@ -1506,11 +1503,9 @@ object Ingest {
                                      keepRaw: Boolean = false): Unit = {
     import graft.llm.Similarity
     if (batch.isEmpty) return
-    // floor the scan parallelism of a batch big enough to pay for a
-    // shuffle: the PQ encode (and a first-batch book train) is the
-    // heaviest per-row kernel in the corpus (guide §2.5)
-    val b = graft.llm.Dedup.scanParallel(batch, col(idCol))
-      .localCheckpoint() // read by train (maybe) + encode
+    // no scan-parallelism floor: a micro-batch of this body is too
+    // small to pay a shuffle job for spreading its encode
+    val b = batch.localCheckpoint() // read by train (maybe) + encode
     val (cents, books) = ensurePqQuantizers(b, batchId, stateDir, idCol,
       vecCol, nCells, iters, m, ks)
     // the raw sidecar and the code state are independent sinks over the
