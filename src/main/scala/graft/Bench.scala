@@ -45,17 +45,7 @@ object Bench {
       "q9X_drift_refresh", "q9Y_embed_dedup", "q9Z_pq_stream_index",
       "qA0_cross_store_tx", "qA1_vstore_merge_sql", "qA2_candle_merge_sql",
       "qAJ_sql_cross_store", "qAK_view_stream", "qAL_view_ddl_modes")
-    // Opt-in SPARK_GRAFT_BENCH_GC=1: force a driver GC between queries
-    // so the ContextCleaner reclaims earlier queries' dead checkpoint
-    // blocks at a uniform point instead of whenever the heap fills.
-    // MEASURED NON-DEFAULT: on this corpus the full GCs also flush
-    // reusable broadcast/codegen state and cost +18% total (89→105 s),
-    // so it stays off unless memory-pressure effects are under study.
-    val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
-    val results = selected.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, fn), qi) =>
-      // not before the FIRST query: that would flush the JIT/codegen
-      // state the untimed warmup just built
-      if (gcBetween && qi > 0) System.gc()
+    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       // A failed query reports -1, never a plausible elapsed time — a
       // regression must look like one, not like a speedup.
       val times = (1 to reps).map { r =>

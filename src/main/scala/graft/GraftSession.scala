@@ -44,10 +44,8 @@ object GraftSession {
       // 176-query corpus, recompiling (janino + C2 JIT) plans that were
       // already compiled minutes earlier. Scale-neutral: it bounds
       // driver memory, not correctness, and a long-lived 100 TB driver
-      // reuses plans exactly the same way. Overridable via
-      // SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
+      // reuses plans exactly the same way.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       // Managed (bucketed) tables go under tmp, keyed by pid so
       // concurrent JVMs (test + bench) never share a table directory —

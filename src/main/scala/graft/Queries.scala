@@ -3041,15 +3041,6 @@ object Queries {
       stateDir
     })
 
-  /** The two streamed-PQ fixture state dirs (frozen q9Z, re-sharded
-    * qA4), built if absent — the serve-path ScaleProbe's entry point:
-    * it times `ivfPqIndexTopK` over these directly, with a FIXED query
-    * set, so the operator's scaling is measured apart from the property
-    * oracles' own Θ(queries·N) brute-force and Θ(N·√N) differential.
-    */
-  private[graft] def pqProbeFixtures(s: SparkSession, d: String): (String, String) =
-    (streamedIvfPqIndexState(s, d), reshardedIvfPqIndexState(s, d))
-
   private val ivfReshardCache = fixtureCache[String]()
 
   /** Streamed RAW-vector IVF index with a MID-STREAM √N RE-SHARD: the
@@ -3079,13 +3070,6 @@ object Queries {
         s"re-sharded IVF indexing must see 3 micro-batches, saw $batches")
       stateDir
     })
-
-  /** The two streamed RAW-IVF fixture state dirs (frozen q9M,
-    * re-sharded qA6) — [[pqProbeFixtures]]'s sibling for the raw-vector
-    * family's serve-path ScaleProbe section.
-    */
-  private[graft] def ivfProbeFixtures(s: SparkSession, d: String): (String, String) =
-    (streamedIvfIndexState(s, d), reshardedIvfIndexState(s, d))
 
   private val ivfDriftCache = fixtureCache[String]()
 
@@ -3165,7 +3149,7 @@ object Queries {
   /** Twin-id offset for the q9Y planted pairs, derived identically by
     * the fixture and the query: the historical +100000 at every
     * oracle-checked SF (hash-stable), one past the real id space when
-    * a synthetic corpus (ScaleProbe's 10×/100× decades) grows into it —
+    * a synthetic corpus (e.g. a 10× or 100× scale-up) grows into it —
     * collision-free at any scale instead of a loud refusal.
     */
   private val twinOffsetCache = fixtureCache[Long]()
@@ -3427,9 +3411,9 @@ object Queries {
         .join(hits, Seq("query_id"), "left")
         .select(coalesce(col("n_hit"), lit(0L)).as("n_hit"))
         .agg(count(lit(1)).as("n_queries"),
-          // Floor 0.9 with margin (q63's policy): measured recall@10 is
-          // 0.987-0.988 at sf0.001/0.01/0.1 (tools/RecallCheck
-          // pq_m8ks256_auto), and codebook training sums are
+          // Floor 0.9 with margin (q63's policy): recall@10 measured
+          // 0.987-0.988 at sf0.001/0.01/0.1 (BASELINE.md "PQ gate
+          // (q79)"), and codebook training sums are
           // float-order-dependent run to run.
           (sum(col("n_hit")).cast("double") /
             (count(lit(1)) * 10).cast("double") >= 0.9).as("recall_ok"))
@@ -3440,8 +3424,9 @@ object Queries {
     // Residual coding (Jégou §IV.A) + m=8/ks=256 books + derived rerank
     // make the ADC+rerank stage near-lossless, so recall ≈ the ROUTING
     // recall of nProbe=10/16 cells on the near-random fixture (the
-    // kmeans_p* ceiling in tools/RecallCheck — on clustered production
-    // data the same probe fraction routes far better).
+    // exact-cosine IVF routing ceiling at the same nProbe, as measured
+    // in August 2026 — on clustered production data the same probe
+    // fraction routes far better).
     "q83_ivfpq_topk_recall" -> ((s, d) => {
       val emb = T.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 10000)
@@ -3457,10 +3442,10 @@ object Queries {
         .join(hits, Seq("query_id"), "left")
         .select(coalesce(col("n_hit"), lit(0L)).as("n_hit"))
         .agg(count(lit(1)).as("n_queries"),
-          // Floor 0.7 with margin (q63's policy): measured recall@10 is
-          // 0.848-0.900 across sf0.001/0.01/0.1 (tools/RecallCheck /
-          // P10 grid), and k-means centroid sums are order-dependent
-          // run to run.
+          // Floor 0.7 with margin (q63's policy): recall@10 measured
+          // 0.848-0.900 across sf0.001/0.01/0.1 (BASELINE.md "IVFADC
+          // gate (q83)"), and k-means centroid sums are
+          // order-dependent run to run.
           (sum(col("n_hit")).cast("double") /
             (count(lit(1)) * 10).cast("double") >= 0.7).as("recall_ok"))
     }),
@@ -3561,10 +3546,10 @@ object Queries {
         .join(hits, Seq("query_id"), "left")
         .select(coalesce(col("n_hit"), lit(0L)).as("n_hit"))
         .agg(count(lit(1)).as("n_queries"),
-          // Floor 0.4 with margin: measured mean recall@5 is 0.61-0.71
-          // across sf0.001/0.01/0.1 (tools/RecallCheck hard_neg_ivf_p4;
-          // near-uniform fixture vectors — the q63 regime; the
-          // clustered spec fixture gates >= 0.9).
+          // Floor 0.4 with margin: mean recall@5 measured 0.61-0.71
+          // across sf0.001/0.01/0.1 (BASELINE.md, round 8 "IVF-scale hard
+          // negatives"; near-uniform fixture vectors — the q63 regime;
+          // CurationSpec's clustered fixture asserts >= 0.9).
           (sum(col("n_hit")).cast("double") /
             (count(lit(1)) * 5).cast("double") >= 0.4).as("recall_ok"))
     }),
@@ -3608,9 +3593,9 @@ object Queries {
         .join(hits, Seq("query_id"), "left")
         .select(coalesce(col("n_hit"), lit(0L)).as("n_hit"))
         .agg(count(lit(1)).as("n_queries"),
-          // Floor 0.4 with margin: measured mean recall@10 is 0.54-0.62
-          // across sf0.001/0.01/0.1 (tools/RecallCheck), and k-means
-          // centroid sums are order-dependent run to run.
+          // Floor 0.4 with margin: mean recall@10 measured 0.54-0.62
+          // across sf0.001/0.01/0.1 (as measured in August 2026), and
+          // k-means centroid sums are order-dependent run to run.
           (sum(col("n_hit")).cast("double") /
             (count(lit(1)) * 10).cast("double") >= 0.4).as("recall_ok"))
     }),

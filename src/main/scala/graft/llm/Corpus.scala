@@ -203,8 +203,8 @@ object Corpus {
     // the merge hint pins the join strategy: the checkpointed set's
     // size statistics can read small enough that the planner tries to
     // BROADCAST one side — at 500k docs that is 41M rows and kills the
-    // driver ("not enough memory to build and broadcast", reproduced
-    // by the CurationScaleCheck soak); SMJ is also the measured-faster
+    // driver ("not enough memory to build and broadcast", seen in a
+    // 500k-doc curation soak, BASELINE.md); SMJ is also the measured-faster
     // shape (see above)
     val inter = sets.as("a").hint("merge")
       .join(sets.as("b").hint("merge"),

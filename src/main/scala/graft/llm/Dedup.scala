@@ -525,9 +525,10 @@ object Dedup {
     * J = 0.8 pair is missed with probability (1 − 0.64)¹⁶ ≈ 1e-7, at
     * the cost of more (exactly-verified) candidates. The false-
     * candidate floor also drops to J*, so pair cost grows — the
-    * operating point is a recall/cost dial, gated at scale by
-    * `tools.CurationScaleCheck` (0 straddled families at the declared
-    * point).
+    * operating point is a recall/cost dial. LlmOpsSpec's "banding
+    * operating point" case asserts that bands=16 finds all 40 planted
+    * J ≈ 0.8 pairs; a round-8 soak at 500k docs measured 0 of 5,000
+    * planted families straddling a split there (BASELINE.md).
     *
     * @param bands number of LSH bands; `k` must divide evenly into
     *   them (`rows = k / bands` exactly)
@@ -906,9 +907,7 @@ object Dedup {
       // round, which has no next round to steer).
       var liveLabels = -1L
       var censusLatched = false
-      lastCcRoundMillis.set(Nil)
       while (!converged && it < maxIter) {
-        val roundT0 = System.nanoTime()
         // (1) neighbor-min
         val nbrMin = loopEdges
           .join(labels.select(col("id").as("v"), col("comp").as("_nc")), Seq("v"))
@@ -961,7 +960,7 @@ object Dedup {
           liveLabels = next.select(approx_count_distinct(col("comp"))).head().getLong(0)
           if (liveLabels <= broadcastLabels) censusLatched = true
         }
-        // per-round join-strategy marker for the skew spec/scale tool
+        // per-round join-strategy marker for LlmOpsSpec's supercritical-skew case
         // (the executed adaptive plan is final once the action above ran)
         if (reliableEvery <= 0)
           lastCcJumpStrategies.updateAndGet(s => s :+ jumpJoinMarker(
@@ -969,11 +968,7 @@ object Dedup {
         unpersist(labelsCp) // superseded the moment `next` materialized
         labelsCp = next
         labels = next.select(col("id"), col("comp"))
-        lastCcRoundMillis.updateAndGet(s =>
-          s :+ (System.nanoTime() - roundT0) / 1000000L)
         it += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round $it changed=${changed.value} t=${System.nanoTime() / 1000000}")
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds (pathological graph?)")
@@ -1025,14 +1020,14 @@ object Dedup {
   }
 
   /** Rounds taken by the most recent [[connectedComponents]] call on
-    * this JVM — instrumentation for specs/ops dashboards (pointer
-    * jumping should stay O(log diameter)).
+    * this JVM. LlmOpsSpec's "converges in O(log d) rounds" case reads
+    * it: pointer jumping should stay O(log diameter).
     */
   val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Per-round pointer-jump join strategy of the most recent
     * [[connectedComponents]] call ("broadcast" / "smj" / "smj-skew") —
-    * instrumentation for the supercritical-skew gate: near convergence
+    * read by LlmOpsSpec's supercritical-skew case: near convergence
     * on a giant-component graph the semi-filtered lookup must go
     * broadcast (no comp-keyed shuffle left to skew). Recorded in
     * localCheckpoint mode only (the default; cache-mode rounds execute
@@ -1046,7 +1041,7 @@ object Dedup {
     * broadcast independently) — read off the executed SparkPlan TREE,
     * descending through AQE wrappers and materialized query stages:
     * matching physical node types instead of the rendered plan string
-    * keeps the scale gates honest across Spark rendering changes.
+    * keeps that spec honest across Spark rendering changes.
     */
   private def jumpJoinMarker(plan: org.apache.spark.sql.execution.SparkPlan): String = {
     import org.apache.spark.sql.catalyst.plans.LeftOuter
@@ -1069,14 +1064,6 @@ object Dedup {
         if (j.isSkewJoin) "shj-skew" else "shj"
     }.getOrElse("unknown")
   }
-
-  /** Per-round wall (ms) of the most recent [[connectedComponents]]
-    * call — the supercritical scale gate asserts round walls stay flat
-    * as the giant component concentrates onto one label (a comp-keyed
-    * shuffle straggler would show as a late-round blowup).
-    */
-  val lastCcRoundMillis =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Long]](Nil)
 
   /** Near-duplicate dedup END TO END: detect pairs (MinHash+LSH), resolve
     * clusters ([[connectedComponents]]), keep the lowest-id document of

@@ -71,9 +71,11 @@ object Sampling {
     * [[Dedup.minhashNearDupPairs]]'s tuning note), which HERE means
     * quiet eval-into-train leakage at the margin. Corpora with short
     * documents or mid-document edits should pass `bands = 16`
-    * (rows = 2, miss ≈ 1e-7 at J = 0.8) — the operating point
-    * `tools.CurationScaleCheck` gates at 0 straddled families on a
-    * 500k-doc corpus with planted mid-edit short-doc families.
+    * (rows = 2, miss ≈ 1e-7 at J = 0.8). At that operating point a
+    * round-8 soak measured 0 of 5,000 planted mid-edit short-doc
+    * families straddling a split on a 500k-doc corpus (BASELINE.md);
+    * LlmOpsSpec's "banding operating point" case asserts the pairs it
+    * depends on at spec scale.
     */
   def leakageFreeSplit(df: DataFrame, idCol: String, textCol: String,
                        weights: Seq[(String, Double)],

@@ -145,14 +145,15 @@ object Similarity {
     * Unlike the bounded ground-truth family, `queries` is NOT
     * broadcast: at mining scale both sides are corpus-sized and the
     * probe join is a shuffle equi-join on `cell_id`, whose key
-    * cardinality tracks `nCells` — which the AnnScaleCheck derivation
-    * scales with the corpus (`nCells ∝ N`), so per-cell populations
-    * and join-key skew stay constant as the corpus grows.
+    * cardinality tracks `nCells`. Scaled with the corpus
+    * (`nCells ∝ N`), per-cell populations and join-key skew stay
+    * constant as the corpus grows.
     *
     * Approximate by construction (cell routing can miss a true
-    * neighbor); recall vs the exact path is gated by SimilaritySpec
-    * (≥ 0.9 on the clustered fixture) and by AnnScaleCheck at 10× the
-    * oracle corpus.
+    * neighbor); recall vs the exact path is asserted by CurationSpec's
+    * "hardNegativesIvf: recall >= 0.9 vs exact" case on a clustered
+    * fixture. Runs at 10× and 100× the oracle corpus measured
+    * recall@10 0.995 / 1.000 (BASELINE.md, round 15).
     */
   def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, idCol: String,
                        vecCol: String, labelCol: String, k: Int,
@@ -408,14 +409,16 @@ object Similarity {
       sampleCentroids(corpus, idCol, vecCol, c))
   }
 
-  /** √N IVF parameterization, the AnnScaleCheck-validated sublinear
-    * family: `nCells ≈ √N / 2` (per-cell occupancy 2√N grows with the
-    * corpus root, not the corpus) and `nProbe ≈ 2·√nCells` (probe SHARE
-    * shrinks as the corpus grows), so the rows a probe scans grow as
-    * ~N^(3/4) instead of Θ(N). A fixed nlist — or a constant
-    * nProbe/nlist ratio — scans Θ(N) per probe and measures LINEAR at a
-    * 100× decade; this family holds the q83 recall floor at 10× and
-    * 100× the oracle fixture (AnnScaleCheck gates both).
+  /** √N IVF parameterization, the sublinear family: `nCells ≈ √N / 2`
+    * (per-cell occupancy 2√N grows with the corpus root, not the
+    * corpus) and `nProbe ≈ 2·√nCells` (probe SHARE shrinks as the
+    * corpus grows), so the rows a probe scans grow as ~N^(3/4) instead
+    * of Θ(N). A fixed nlist — or a constant nProbe/nlist ratio — scans
+    * Θ(N) per probe and measures LINEAR at a 100× decade. This family
+    * held the q83 recall floor of 0.7 at 10× and 100× the oracle
+    * fixture when last measured (recall@10 0.976 / 0.888 at 20k / 200k
+    * vectors, BASELINE.md, round 15); IvfPqStreamSpec and StreamingSpec
+    * assert the derived `nCells` at spec scale.
     *
     * Pass the (approximate) corpus size you are building for — the
     * hint OVERRIDES literal nCells/nProbe at the call sites that take

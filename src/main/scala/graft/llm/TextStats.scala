@@ -618,21 +618,4 @@ object TextStats {
       length(redactPii(t)).as("redacted_len"),
       md5(redactPii(t)).as("redacted_md5"))
   }
-
-  /** Per-document stats frame: one row per doc with all declared
-    * metrics, from one compiled pass.
-    */
-  def documentStats(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-        docStatsUdf(tokens(col(textCol)), length(col(textCol))).as("_st"))
-      .select(
-        col(idCol),
-        col("_st.n_tokens").as("n_tokens"),
-        col("_st.n_subwords").as("n_subwords"),
-        col("_st.n_chars").as("n_chars"),
-        Portable.round(col("_st.stopword_ratio"), 4).as("stopword_ratio"),
-        Portable.round(col("_st.mean_word_len"), 4).as("mean_word_len"),
-        col("_st.quality").as("quality"),
-        col("_st.lang_pred").as("lang_pred"),
-        col("_st.fingerprint").as("fingerprint"))
 }

@@ -1839,7 +1839,8 @@ object Ingest {
         // standard IVF training budget): full-membership Lloyd's at
         // k ≈ √N costs O(N·√N·dim) per iteration — superlinear in the
         // corpus — while the sampled train is O(N·dim) and the recall
-        // band is unchanged (AnnScaleCheck trains sampled throughout).
+        // band is unchanged (the 20k- and 200k-vector ANN runs in
+        // BASELINE.md's round-15 log trained on a 1-in-4 sample).
         // Assignment/encoding below still covers every vector.
         val sampleMod = math.max(1L, nJoined / (256L * k)).toInt
         val trained = Similarity.kmeansCentroids(vecs, "id", "vec", k,

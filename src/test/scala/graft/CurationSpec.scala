@@ -333,6 +333,9 @@ class CurationSpec extends SparkSpec {
     assert(got == expect)
     // the overwhelming weight is drawn (priority <= 1 vs ~1e9-scale)
     assert(got.contains(7L))
+    // a zero race priority is valid; a negative one is a bug
+    assert(Sampling.weightedSample(df, "id", "w", k = 20)
+      .where($"priority" < 0).count() == 0)
     // layout-independent
     val again = Sampling.weightedSample(df.repartition(13), "id", "w", k = 20)
       .select("id").as[Long].collect().toSet
@@ -364,6 +367,7 @@ class CurationSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val js = out.map(r => r._1 -> r._3).toMap
     val n = out.map(r => r._1 -> r._2).toMap
+    assert(out.length == 3, "one row per source")
     assert(n("srcA") == 100L && n("srcB") == 100L && n("srcC") == 30L)
     assert(out.forall(r => r._3 >= 0.0 && r._3 <= math.log(2.0) + 1e-3))
     // identical distributions -> identical divergence (round-4 outputs)

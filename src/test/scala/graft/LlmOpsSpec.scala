@@ -391,6 +391,7 @@ class LlmOpsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(math.abs(counts("train") - 1600L) < 100, counts.toString)
     assert(math.abs(counts("val") - 200L) < 60 && math.abs(counts("test") - 200L) < 60)
+    assert(counts.values.sum == 2000L, "every doc lands in exactly one split")
     // append stability: assignments on a subset == the same rows' assignments
     // on the full set (membership is a pure function of id)
     val subset = Sampling.hashSplit(ids.where($"doc_id" < 500), "doc_id",

@@ -188,6 +188,9 @@ class TimeSeriesSpec extends SparkSpec {
     // 3-row frame at the last row: changes +1, +1, -3 -> avg gain 2/3,
     // avg loss 1 -> RSI 40
     assert(math.abs(out(6).getDouble(4) - (100.0 - 100.0 / (1 + (2.0 / 3.0) / 1.0))) < 1e-12)
+    // the Donchian channel includes the current row, so it bounds every close
+    assert(TimeSeries.indicators(df, "close", "ts", Seq("code"), n = 3, rocN = 2)
+      .where($"close" > $"donchian_hi" || $"close" < $"donchian_lo").count() == 0)
   }
 
   test("ema: recursive fold matches closed form, per key, layout-independent") {

@@ -57,6 +57,7 @@ class ZOrderSpec extends SparkSpec {
     val dir = tmpDir("zorder-3d")
     ZOrder.clusterN(pts, Seq("x", "y", "w"), 16, bitsPerDim = 4)
       .write.mode("overwrite").parquet(dir)
+    assert(spark.read.parquet(dir).count() == 4096, "clustering keeps every row")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bounds = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq

@@ -6,10 +6,12 @@
 #     tools/closeout.sh TAG [FIRST_STEP]
 #
 # Steps: 1 test suite, 2 cross-SF oracle (verify_all_sf.sh), 3 full
-# reps=3 bench, 4 plan audit, 5 ingest soak, 6 locked-78 subset reps=3,
-# 7 view-feed decade. FIRST_STEP (default 1) resumes a broken chain;
-# a resumed chain appends to the same chain log. Logs go to
-# /tmp/${TAG}_*, the two bench artifacts to BENCH_LOCAL_${TAG}_*.json.
+# reps=3 bench, 4 plan audit (and one final-plan Explain), 5 ingest
+# soak, 6 locked-78 subset reps=3, 7 view-feed decade. Every main under
+# src/main/scala/graft/tools runs in one of these steps (ToolsGatedSpec).
+# FIRST_STEP (default 1) resumes a broken chain; a resumed chain appends
+# to the same chain log. Logs go to /tmp/${TAG}_*, the two bench
+# artifacts to BENCH_LOCAL_${TAG}_*.json.
 set -u -o pipefail
 TAG="${1:?usage: tools/closeout.sh TAG [FIRST_STEP]}"
 FIRST="${2:-1}"
@@ -48,6 +50,9 @@ step4() {
   sbt -batch "runMain graft.tools.PlanAudit $DATA/sf0.01" \
     > "${LOG}_planaudit.log" 2>&1
   say "planaudit exit=$?"
+  sbt -batch "runMain graft.tools.Explain q01_pricing_summary $DATA/sf0.01 plan" \
+    > "${LOG}_explain.log" 2>&1
+  say "explain exit=$?"
 }
 
 step5() {
@@ -73,7 +78,7 @@ step7() {
   tee -a "$CHAIN" < "${LOG}_feeddecade.log"
 }
 
-NAMES=("" "full test suite" "cross-SF gate" "full reps=3 bench" "plan audit"
+NAMES=("" "full test suite" "cross-SF gate" "full reps=3 bench" "plan audit + Explain"
   "ingest soak" "locked-78 subset reps=3" "view-feed decade")
 for i in 1 2 3 4 5 6 7; do
   [ "$i" -lt "$FIRST" ] && continue
